@@ -46,6 +46,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MAGIC = b"Obj\x01"
+#: suffix of a partition directory an overwrite has moved aside
+MOVED_ASIDE = "._overwrite_old"
 
 # --------------------------------------------------------------- schema
 
@@ -311,30 +313,49 @@ def encode_container(rows: Iterator[tuple], schema: T.StructType,
     return out.getvalue()
 
 
-def decode_container(data: bytes) -> tuple[T.StructType, list[tuple]]:
-    """Avro object-container bytes → (schema, rows as tuples)."""
-    mv = memoryview(data)
+def _read_header(mv: memoryview) -> tuple[dict[str, bytes], int]:
+    """Container header → (metadata map, offset of the first block).
+    Raises ``EOFError`` when ``mv`` ends inside the header."""
     if bytes(mv[:4]) != MAGIC:
         raise ValueError("not an Avro object container file")
     pos = 4
     meta: dict[str, bytes] = {}
-    while True:
-        n, pos = _read_long(mv, pos)
-        if n == 0:
-            break
-        if n < 0:                          # negative count → size follows
-            n = -n
-            _, pos = _read_long(mv, pos)
-        for _ in range(n):
-            kl, pos = _read_long(mv, pos)
-            k = str(mv[pos:pos + kl], "utf-8")
-            pos += kl
-            vl, pos = _read_long(mv, pos)
-            meta[k] = bytes(mv[pos:pos + vl])
-            pos += vl
+    try:
+        while True:
+            n, pos = _read_long(mv, pos)
+            if n == 0:
+                break
+            if n < 0:                      # negative count → size follows
+                n = -n
+                _, pos = _read_long(mv, pos)
+            for _ in range(n):
+                kl, pos = _read_long(mv, pos)
+                k = str(mv[pos:pos + kl], "utf-8")
+                pos += kl
+                vl, pos = _read_long(mv, pos)
+                meta[k] = bytes(mv[pos:pos + vl])
+                pos += vl
+    except IndexError:
+        raise EOFError("Avro container header is truncated") from None
+    pos += 16                              # sync marker
+    if pos > len(mv):
+        raise EOFError("Avro container header is truncated")
+    return meta, pos
+
+
+def container_schema(head: bytes) -> T.StructType:
+    """Spark schema from the header of an Avro container; ``head`` may
+    be any prefix of the file that holds the whole header."""
+    meta, _ = _read_header(memoryview(head))
+    return spark_schema_from_avro(meta["avro.schema"].decode())
+
+
+def decode_container(data: bytes) -> tuple[T.StructType, list[tuple]]:
+    """Avro object-container bytes → (schema, rows as tuples)."""
+    mv = memoryview(data)
+    meta, pos = _read_header(mv)
     schema = spark_schema_from_avro(meta["avro.schema"].decode())
     codec = meta.get("avro.codec", b"null").decode()
-    pos += 16                              # sync marker
     decs = _make_decoders(schema)
     ncols = len(decs)
     rows: list[tuple] = []
@@ -447,7 +468,7 @@ def write_avro_partitioned(df: DataFrame, field_names: list[str],
             collected_rels.add(rel)
             target = os.path.join(path, rel)
             if os.path.isdir(target):
-                old = target.rstrip("/") + "._overwrite_old"
+                old = target.rstrip("/") + MOVED_ASIDE
                 if os.path.isdir(old):
                     # leftover from a crashed run: it may hold the ONLY
                     # good copy of this partition (the live dir could be
@@ -472,7 +493,7 @@ def write_avro_partitioned(df: DataFrame, field_names: list[str],
 
     def write_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         rel = _hive_dir(field_names, key)
-        if any(seg.endswith("._overwrite_old") for seg in rel.split("/")):
+        if any(seg.endswith(MOVED_ASIDE) for seg in rel.split("/")):
             # a legitimate VALUE ending in the move-aside marker would
             # collide with the crash-recovery scheme: its files are
             # excluded from every read (list_avro_containers filters
@@ -632,15 +653,14 @@ def list_avro_containers(spark, path: str):
     """The ONE binaryFile listing for .avro containers under a tree:
     recursive, '*.avro'-globbed, excluding any crashed overwrite's
     '._overwrite_old/' move-aside dir (whose files would parse a
-    mangled partition value out of the path).  Shared by the
-    distributed reader below and sources.read's header-sampling
-    fallback so the exclusion predicate cannot desynchronize
-    (r14 review)."""
+    mangled partition value out of the path).  ``sources.read``'s
+    driver-side walk skips the same directories when it picks the
+    container whose header gives the schema."""
     return (spark.read.format("binaryFile")
             .option("pathGlobFilter", "*.avro")
             .option("recursiveFileLookup", "true")
             .load(path)
-            .where(~F.col("path").contains("._overwrite_old/")))
+            .where(~F.col("path").contains(MOVED_ASIDE + "/")))
 
 
 def read_avro_partitioned(spark: SparkSession, path: str,

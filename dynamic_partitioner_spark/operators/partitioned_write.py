@@ -376,8 +376,11 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame,
     ``isin`` filter on the partition columns prunes directories before
     IO), an anti-join on the business key (updates side is typically
     small → broadcast), then a dynamic-overwrite write of those
-    partitions only.  Cost scales with the touched partitions, not the
-    dataset.
+    partitions only.  The scan, the join and the rewrite scale with
+    the touched partitions; resolving the read does not: it lists the
+    whole tree and, through ``merge_schema=True``, reads the footer of
+    every file in the dataset in a Spark job before the filter prunes
+    anything, so that cost grows with the dataset's file count.
 
     ``deletes`` (optional) removes keys without replacement: a frame
     carrying ``key_cols`` plus the partition columns (so the affected

@@ -1,15 +1,18 @@
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, REPO)
 
 from dynamic_partitioner_spark import get_spark  # noqa: E402
 
-SCRATCH = "/root/repo/.scratch/tests"
+SCRATCH = os.path.join(REPO, ".scratch/tests")
 
 
 @pytest.fixture(scope="session")

@@ -8,7 +8,9 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, REPO)
 
 from bench import sweep_writer_debris  # noqa: E402
 
@@ -64,7 +66,7 @@ def test_bench_full_baseline_carries_self_labels():
     remeasure guard for a whole round (r11 VERDICT #1 — the r10
     driver's unlabeled 368s artifact sat at HEAD while dedup_apply
     cold-read 2.18x vs the clean band).  Red any unlabeled baseline."""
-    with open("/root/repo/BENCH_FULL.json") as f:
+    with open(os.path.join(REPO, "BENCH_FULL.json")) as f:
         doc = json.load(f)
     missing = [k for k in ("canary_ratio", "remeasured", "load",
                            "load_end", "canary_keys")
@@ -85,7 +87,7 @@ def test_certify_booleans_raises_on_null_and_false(spark):
     import pytest
 
     spec = importlib.util.spec_from_file_location(
-        "entry_mod_cb", "/root/repo/__spark_entry__.py")
+        "entry_mod_cb", os.path.join(REPO, "__spark_entry__.py"))
     m = importlib.util.module_from_spec(spec)
     sys.modules["entry_mod_cb"] = m
     spec.loader.exec_module(m)
@@ -119,7 +121,7 @@ def test_bounded_stdout_payload_fits_driver_tail_window():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "bench_mod_bp", "/root/repo/bench.py")
+        "bench_mod_bp", os.path.join(REPO, "bench.py"))
     B = importlib.util.module_from_spec(spec)
     sys.modules["bench_mod_bp"] = B
     spec.loader.exec_module(B)
@@ -165,7 +167,7 @@ def test_bounded_stdout_payload_truncates_pathological_hot_list():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "bench_mod_bp2", "/root/repo/bench.py")
+        "bench_mod_bp2", os.path.join(REPO, "bench.py"))
     B = importlib.util.module_from_spec(spec)
     sys.modules["bench_mod_bp2"] = B
     spec.loader.exec_module(B)
@@ -191,7 +193,7 @@ def test_bounded_stdout_payload_keeps_top30_under_mass_remeasure():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "bench_mod_bp3", "/root/repo/bench.py")
+        "bench_mod_bp3", os.path.join(REPO, "bench.py"))
     B = importlib.util.module_from_spec(spec)
     sys.modules["bench_mod_bp3"] = B
     spec.loader.exec_module(B)

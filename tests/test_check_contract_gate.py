@@ -5,13 +5,16 @@ future loosening of either gate fails loudly."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 import sys
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 import check_contract as CC  # noqa: E402
 

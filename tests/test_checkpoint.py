@@ -7,7 +7,9 @@ the checkpoint dir."""
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+sys.path.insert(0, REPO)
 
 from dynamic_partitioner_spark.functions.checkpoint import (  # noqa: E402
     RELIABLE_CHECKPOINT_CONF, checkpoint_df)

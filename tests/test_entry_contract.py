@@ -2,12 +2,15 @@
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _entry():
     spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py")
+        "entry_mod", os.path.join(REPO, "__spark_entry__.py"))
     m = importlib.util.module_from_spec(spec)
     sys.modules["entry_mod"] = m
     spec.loader.exec_module(m)
@@ -100,8 +103,8 @@ def test_tool_key_lists_are_unique_and_resolve():
 
     m = _entry()
     valid = set(m.queries())
-    for path in ("/root/repo/tools/audit_plans.py",
-                 "/root/repo/tools/scale_sweep.py"):
+    for path in (os.path.join(REPO, "tools/audit_plans.py"),
+                 os.path.join(REPO, "tools/scale_sweep.py")):
         src = open(path).read()
         block = re.search(r"(?:AUDIT_KEYS|SWEEP_KEYS) = \[(.*?)\]",
                           src, re.S).group(1)
@@ -157,7 +160,7 @@ def test_freshness_budget_holds():
     import subprocess
     import sys as _sys
     r = subprocess.run(
-        [_sys.executable, "/root/repo/tools/check_freshness.py"],
+        [_sys.executable, os.path.join(REPO, "tools/check_freshness.py")],
         capture_output=True, text=True)
     assert r.returncode == 0, r.stdout + r.stderr
 
@@ -196,7 +199,7 @@ def test_freshness_slack_and_never_green_semantics():
     (fold round == current - 1) WARNS; two+ rounds, text-newer, and
     never-green keys FAIL regardless of slack — a never-green key
     auto-joins every fold until green."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(REPO, "tools"))
     import check_freshness as CF
 
     fps = {k: "f" for k in
@@ -236,7 +239,7 @@ def test_freshness_flags_red_regression_after_old_green():
     one (a regression) is stale with no slack — previously the
     latest-any-round map was discarded and the regressed key passed
     the gate as fresh for up to two more rounds."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(REPO, "tools"))
     import check_freshness as CF
 
     fps = {"regressed": "f", "fine": "f"}

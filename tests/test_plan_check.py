@@ -11,12 +11,15 @@ shipping.
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _audit():
     spec = importlib.util.spec_from_file_location(
-        "audit_mod", "/root/repo/tools/audit_plans.py")
+        "audit_mod", os.path.join(REPO, "tools/audit_plans.py"))
     m = importlib.util.module_from_spec(spec)
     sys.modules["audit_mod"] = m
     spec.loader.exec_module(m)
@@ -25,7 +28,7 @@ def _audit():
 
 def _entry():
     spec = importlib.util.spec_from_file_location(
-        "entry_mod_plan", "/root/repo/__spark_entry__.py")
+        "entry_mod_plan", os.path.join(REPO, "__spark_entry__.py"))
     m = importlib.util.module_from_spec(spec)
     sys.modules["entry_mod_plan"] = m
     spec.loader.exec_module(m)

@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import os
+
 import __spark_entry__ as E
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SF = "/root/testdata/sf0.001"
 
@@ -46,7 +50,7 @@ def test_approx_percentiles_rank_error_bound(spark):
     (value-space gaps can be large in sparse tails, so that is the
     wrong thing to pin)."""
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
 
     import __spark_entry__ as E
 
@@ -103,7 +107,7 @@ def test_hll_mergeable_sketches_union_equals_direct(spark):
     import sys
 
     spec = importlib.util.spec_from_file_location(
-        "entry_mod_hll", "/root/repo/__spark_entry__.py")
+        "entry_mod_hll", os.path.join(REPO, "__spark_entry__.py"))
     m = importlib.util.module_from_spec(spec)
     sys.modules["entry_mod_hll"] = m
     spec.loader.exec_module(m)

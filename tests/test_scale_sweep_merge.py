@@ -6,12 +6,15 @@ string-level tests over tools/scale_sweep.py's merge unit."""
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _sweep():
     spec = importlib.util.spec_from_file_location(
-        "sweep_mod", "/root/repo/tools/scale_sweep.py")
+        "sweep_mod", os.path.join(REPO, "tools/scale_sweep.py"))
     m = importlib.util.module_from_spec(spec)
     sys.modules["sweep_mod"] = m
     spec.loader.exec_module(m)

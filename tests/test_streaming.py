@@ -10,6 +10,8 @@ from dynamic_partitioner_spark.streaming.write import (
     stream_write_partitioned,
 )
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_streaming_partitioned_write_golden_layout(spark, purchase_df, tmp_out):
     src = f"{tmp_out}/src"
@@ -376,7 +378,7 @@ def test_streaming_late_audit_drops_replay_and_holds_tail(spark):
     import sys
 
     spec = importlib.util.spec_from_file_location(
-        "entry_mod_late", "/root/repo/__spark_entry__.py")
+        "entry_mod_late", os.path.join(REPO, "__spark_entry__.py"))
     m = importlib.util.module_from_spec(spec)
     sys.modules["entry_mod_late"] = m
     spec.loader.exec_module(m)

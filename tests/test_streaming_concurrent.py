@@ -5,6 +5,7 @@ must both complete and produce exactly the single-threaded result."""
 
 from __future__ import annotations
 
+import os
 import shutil
 from concurrent.futures import ThreadPoolExecutor
 
@@ -17,8 +18,10 @@ from dynamic_partitioner_spark.streaming.write import (
     run_stream_to_completion, run_streaming_upsert, stream_from_files,
     stream_write_partitioned)
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SF_DIR = "/root/testdata/sf0.001"
-SCRATCH = "/root/repo/.scratch/tests/concurrent"
+SCRATCH = os.path.join(REPO, ".scratch/tests/concurrent")
 
 
 def _dirs(*names: str) -> list[str]:
