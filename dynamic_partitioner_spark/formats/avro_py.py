@@ -404,10 +404,12 @@ def write_avro_partitioned(df: DataFrame, field_names: list[str],
     overwrite semantics as the parquet/orc path: partition dirs present
     in the incoming data are moved aside (``._overwrite_old``), the
     write runs, then the old dirs are deleted; a failed write restores
-    them.  The distinct-keys collect is bounded by the partition count
-    (same documented pattern as the CREATE existence check).  The
-    fallback writer requires a POSIX-visible output path on all
-    executors (it already writes through the local file API).
+    them.  That overwrite's distinct-keys collect is bounded by the
+    partition count.  A CREATE write collects no keys here:
+    ``write_partitioned`` points ``path`` at its staging directory and
+    claims the partitions written there afterwards.  The fallback
+    writer requires a POSIX-visible output path on all executors (it
+    already writes through the local file API).
     """
     import pandas as pd
 
@@ -689,7 +691,7 @@ def read_avro_partitioned(spark: SparkSession, path: str,
 
     def decode(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
         from dynamic_partitioner_spark.functions.paths import (
-            partition_value_from_dir)
+            escape_path_name, partition_value_from_dir)
         for batch in batches:
             paths = batch.column(0).to_pylist()
             contents = batch.column(1).to_pylist()
@@ -711,7 +713,7 @@ def read_avro_partitioned(spark: SparkSession, path: str,
                     pa.array([r[pos[f.name]] for r in rows], type=at)
                     for f, at in zip(payload_schema.fields, arrow_types)]
                 for f in field_names:
-                    marker = f"/{f}="
+                    marker = f"/{escape_path_name(f)}="
                     if marker not in fpath:
                         # a mixed-depth tree or stray .avro file whose
                         # path lacks the partition dir previously died

@@ -36,7 +36,8 @@ DEFAULT_PARTITION_NAME = "__HIVE_DEFAULT_PARTITION__"
 
 
 def escape_path_name(value: str) -> str:
-    """Escape a partition value exactly as Spark's native writer does."""
+    """Escape a partition column name or value exactly as Spark's
+    native writer does."""
     return "".join(f"%{ord(c):02X}" if c in _TO_ESCAPE else c
                    for c in value)
 
@@ -70,12 +71,15 @@ def unescape_path_name(name: str) -> str:
 
 def hive_partition_path(field_names: list[str],
                         values: tuple[str, ...]) -> str:
-    """``f1=v1/f2=v2`` relative path with writer-exact escaping.
+    """``f1=v1/f2=v2`` relative path with writer-exact escaping of
+    column names and values (a column ``a:b`` names ``a%3Ab=``
+    directories, as ``getPartitionPathString`` does).
     An EMPTY value spells :data:`DEFAULT_PARTITION_NAME`, exactly as
     ``getPartitionPathString`` does — composing ``f=`` here made the
     emptied-partition prune's existence check miss the directory the
     native writer actually created, silently skipping its delete
     (r14 review)."""
     return "/".join(
-        f"{f}={escape_path_name(str(v)) if str(v) else DEFAULT_PARTITION_NAME}"
+        f"{escape_path_name(f)}="
+        f"{escape_path_name(str(v)) if str(v) else DEFAULT_PARTITION_NAME}"
         for f, v in zip(field_names, values))

@@ -10,8 +10,11 @@ Reference behavior being re-expressed (all file:line cites vs
     CDAP ``DynamicPartitioner`` machinery, built in.
   * ``CREATE`` vs ``CREATE_OR_APPEND`` partition write options
     (``AvroDynamicPartitionedDatasetSink.java:70-73``): append maps to
-    ``mode("append")``; CREATE = fail-if-partition-exists needs a
-    pre-write existence check (below).
+    ``mode("append")``; CREATE = fail-if-partition-exists is enforced
+    at commit, as the reference's driver does when it registers
+    partition metadata after the tasks finish: the write lands in a
+    hidden staging directory and each partition is then claimed by an
+    exclusive rename (see :func:`write_partitioned`).
   * stage tagging ``_CDAPStageName`` (``Constants.java:9-10``,
     ``Schemas.java:24-30``): opt-in constant column, off by default.
 
@@ -22,22 +25,29 @@ Scale posture (the part the reference could not do):
     one-per-task-per-key) while SPLITTING skewed keys across tasks, so a
     hot key neither explodes small files nor bottlenecks one task.
   * ``maxRecordsPerFile`` caps file size for giant partitions.
-  * The CREATE existence check lists partition directories through the
-    Hadoop FileSystem API (works on HDFS/S3/local alike) and only scans
-    the input for distinct keys when the target already has partitions —
-    the common empty-target case costs one metadata call.
+  * The CREATE claim runs no Spark job: the new partition set comes
+    from listing the staged tree, and each claim is one rename, so its
+    cost follows the partitions the batch writes, not the target's.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import errno
+import os
+import shutil
+import uuid
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.paths import hive_partition_path, partition_value_from_dir
+from ..functions.paths import (escape_path_name, hive_partition_path,
+                               partition_value_from_dir,
+                               unescape_path_name)
 from ..functions.checkpoint import checkpoint_df
-from ..sources.read import read_partitioned
+from ..sources.read import is_local_scheme, read_partitioned
 from ..spec import SinkSpec, SpecError
 from .partition_keys import normalize_partition_keys
 
@@ -45,32 +55,14 @@ from .partition_keys import normalize_partition_keys
 #: neutral name; the semantic (constant routing column) is identical.
 STAGE_FIELD = "_stage"
 
+#: name prefix of a CREATE write's staging directory under the target:
+#: the leading "." hides it from Spark's file index and from every
+#: lister here, and it holds no "=", so no walk takes it for a partition
+STAGING_PREFIX = ".graft-staging-"
+
 
 class PartitionExistsError(RuntimeError):
     """CREATE-mode write would touch an already-existing partition."""
-
-
-def _rebalance_by_keys(df: DataFrame, cols: list[str]) -> DataFrame:
-    """AQE REBALANCE on the partition keys, or plain repartition on
-    Spark < 3.2 — which DROPS unknown hints with only a log warning
-    (no exception), so a try/except can't detect missing REBALANCE
-    support; gate on the version explicitly.  ONE implementation
-    (r15 review: the 8-line gate was duplicated verbatim in
-    write_partitioned and compact_partitions — the compaction copy
-    silently drifting would reproduce the small files it exists to
-    remove)."""
-    spark = df.sparkSession
-    major, minor = (int(x) for x in spark.version.split(".")[:2])
-    if (major, minor) >= (3, 2):
-        return df.hint("rebalance", *cols)
-    return df.repartition(*[F.col(c) for c in cols])
-
-
-def _base_path_exists(spark: SparkSession, base_path: str) -> bool:
-    """One FS metadata call — the fresh-target fast path."""
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(base_path)
-    return jp.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jp)
 
 
 def existing_touched_partitions(
@@ -121,7 +113,8 @@ def list_existing_partitions(spark: SparkSession, base_path: str,
         if depth == len(field_names):
             found.add(prefix)
             return
-        want = field_names[depth] + "="
+        # the writer escapes the column name too (``a:b`` -> ``a%3Ab``)
+        want = escape_path_name(field_names[depth]) + "="
         for status in fs.listStatus(path):
             if not status.isDirectory():
                 continue
@@ -144,11 +137,36 @@ def write_partitioned(df: DataFrame, spec: SinkSpec, path: str | None = None) ->
     config and :class:`PartitionExistsError` in CREATE mode when an
     incoming key already exists (reference ``PartitionAlreadyExistsException``
     semantics via the CREATE write option).
+
+    CREATE is checked at commit, not before the write.  The batch is
+    written into a hidden ``.graft-staging-<uuid>`` directory under the
+    target; the staged tree's listing gives the new partitions, and each
+    one is claimed by an exclusive rename into place (an existing
+    partition directory, even an empty one, is a clash).  Two CREATE
+    writers racing for one partition therefore cannot both win it.  On
+    a clash every partition this call already claimed moves back out
+    and nothing of the batch stays visible; on a failed write likewise.
+    The staging directory is removed after these outcomes.  Should the
+    staged tree hold a file that no claimed partition carried, the
+    claims roll back and the whole batch stays in the staging directory
+    for recovery, with an error naming it.  Costs and limits of this
+    protocol:
+
+    * A clashing CREATE write pays for the whole write before it finds
+      the clash, then rolls back.
+    * A crash mid-claim leaves each claimed partition whole (one rename
+      each) and the unclaimed rest in the staging directory, which every
+      reader skips; delete it by hand.
+    * On object stores a rename copies the bytes and is not exclusive,
+      so two writers there can both claim a partition.  Local disks and
+      HDFS rename atomically.
+    * Append writers running alongside a CREATE writer on the same
+      target are not supported: files an append adds to a partition the
+      CREATE writer has claimed leave with that partition if it rolls
+      back.
     """
     spec.validate(df.schema)
     out = path or spec.base_path or spec.name
-    spark = df.sparkSession
-
     ndf = normalize_partition_keys(df, spec.field_names)
     if spec.stage_name is not None:
         if STAGE_FIELD in ndf.columns:
@@ -161,37 +179,31 @@ def write_partitioned(df: DataFrame, spec: SinkSpec, path: str | None = None) ->
                 "stage tagging would overwrite it — rename the "
                 "column or unset stage_name")
         ndf = ndf.withColumn(STAGE_FIELD, F.lit(spec.stage_name))
+    if spec.mode_is_append or spec.overwrite_partitions:
+        _write(ndf, spec, out)
+    else:
+        _write_and_claim(ndf, spec, out)
+    return out
 
-    if not spec.mode_is_append and not spec.overwrite_partitions:
-        # O(|incoming|) existence probes, not a full partition walk
-        # (r15 review): the clash question only concerns the keys this
-        # batch carries.  The base-existence check comes FIRST so the
-        # common fresh-target case stays one FS metadata call and
-        # never pays the distinct-collect job (r15 bench: losing this
-        # fast path slowed every CREATE-mode write)
-        if _base_path_exists(spark, out):
-            incoming = _collect_key_tuples(ndf, spec.field_names)
-            clash = existing_touched_partitions(
-                spark, out, spec.field_names, incoming)
-            if clash:
-                raise PartitionExistsError(
-                    f"partitions already exist under {out}: "
-                    f"{sorted(clash)[:5]}"
-                    f"{'...' if len(clash) > 5 else ''}")
 
+def _write(ndf: DataFrame, spec: SinkSpec, out: str) -> None:
+    """Write the key-normalized ``ndf`` under ``out``: appending, or in
+    dynamic overwrite when ``spec.overwrite_partitions``."""
+    spark = ndf.sparkSession
     if spec.fmt == "avro" and not spark_avro_available(spark):
         # no spark-avro connector jar in this deployment — use the
         # pure-Python container codec (same Hive layout + per-key writer
         # fan-out + dynamic overwrite; see formats/avro_py.py)
         from ..formats import write_avro_partitioned
         codec = (spec.compression_codec or "deflate").lower()
-        return write_avro_partitioned(
+        write_avro_partitioned(
             ndf, spec.field_names, out,
             codec="null" if codec == "none" else codec,
             overwrite_partitions=spec.overwrite_partitions)
+        return
 
     if spec.cluster_by_key:
-        ndf = _rebalance_by_keys(ndf, spec.field_names)
+        ndf = ndf.hint("rebalance", *map(F.col, spec.field_names))
 
     if spec.sort_within:
         # sorted write (Iceberg sorted-table / Delta OPTIMIZE shape):
@@ -225,7 +237,219 @@ def write_partitioned(df: DataFrame, spec: SinkSpec, path: str | None = None) ->
     finally:
         if spec.overwrite_partitions:
             spark.conf.set(overwrite_conf, prev_mode)
-    return out
+
+
+def _write_and_claim(ndf: DataFrame, spec: SinkSpec, out: str) -> None:
+    """CREATE: stage the write under ``out``, then claim the staged
+    partitions in sorted order (so of two writers with overlapping
+    batches at least one gets through), undoing every claim of this
+    call on a clash or any other failure.  No Spark job beyond the
+    write itself."""
+    spark = ndf.sparkSession
+    name = STAGING_PREFIX + uuid.uuid4().hex
+    staging = f"{out.rstrip('/')}/{name}"
+    jout = spark._jvm.org.apache.hadoop.fs.Path(out)
+    fs = jout.getFileSystem(spark._jsc.hadoopConfiguration())
+    root = fs.makeQualified(jout)
+    tree = (_LocalClaims(root.toUri().getPath(), name)
+            if is_local_scheme(fs.getScheme())
+            else _HadoopClaims(spark, fs, root, name))
+    keep_staging = False
+    try:
+        _write(ndf, spec, staging)
+        staged = sorted(list_existing_partitions(spark, staging,
+                                                 spec.field_names))
+        rels = [hive_partition_path(spec.field_names, t) for t in staged]
+        claimed: list[str] = []
+        try:
+            for i, rel in enumerate(rels):
+                if not tree.claim(rel):
+                    # the later keys are not ours yet: any that exists
+                    # clashes too
+                    clash = [staged[i]] + [t for t, r in zip(
+                        staged[i + 1:], rels[i + 1:]) if tree.exists(r)]
+                    raise PartitionExistsError(
+                        f"partitions already exist under {out}: "
+                        f"{clash[:5]}{'...' if len(clash) > 5 else ''}")
+                claimed.append(rel)
+            left = tree.unclaimed()
+            if left:
+                # the listing missed part of the batch: deleting the
+                # staging directory would drop those rows unseen
+                keep_staging = True
+                raise RuntimeError(
+                    f"CREATE write to {out} staged files outside every "
+                    f"partition it claimed, e.g. {left[:3]}; nothing was "
+                    f"published and the batch is kept in {staging}")
+        except BaseException:
+            tree.rollback(claimed)
+            raise
+        tree.publish_files()
+    finally:
+        if not keep_staging:
+            tree.remove_staging()
+
+
+class _LocalClaims:
+    """Claims on the local disk with ``os.rename``.  POSIX ``rename(2)``
+    refuses a non-empty target (``ENOTEMPTY``) in one atomic step, and
+    a staged partition is never empty; an empty target directory it
+    would replace, so an existing target is refused before renaming."""
+
+    def __init__(self, out: str, staging_name: str) -> None:
+        self.out = out
+        self.staging = os.path.join(out, staging_name)
+        #: parent directories the claims created, for the rollback
+        self.made: list[str] = []
+
+    def exists(self, rel: str) -> bool:
+        return os.path.lexists(os.path.join(self.out, rel))
+
+    def _make_parents(self, rel: str) -> None:
+        parent = self.out
+        for part in rel.split("/")[:-1]:
+            parent = os.path.join(parent, part)
+            try:
+                os.mkdir(parent)
+                self.made.append(parent)
+            except FileExistsError:
+                pass
+
+    def claim(self, rel: str) -> bool:
+        """Move staged partition ``rel`` into place; False on a clash."""
+        if self.exists(rel):
+            return False
+        src = os.path.join(self.staging, rel)
+        dst = os.path.join(self.out, rel)
+        self._make_parents(rel)
+        try:
+            try:
+                os.rename(src, dst)
+            except FileNotFoundError:
+                # a parent another writer made was removed by its
+                # rollback between our mkdir and our rename
+                self._make_parents(rel)
+                os.rename(src, dst)
+        except OSError as e:
+            if e.errno in (errno.ENOTEMPTY, errno.EEXIST):
+                return False
+            raise
+        return True
+
+    def unclaimed(self) -> list[str]:
+        """Files still below the staging directory's top level."""
+        return [os.path.relpath(os.path.join(d, f), self.staging)
+                for d, _, files in os.walk(self.staging)
+                if d != self.staging for f in files]
+
+    def rollback(self, claimed: list[str]) -> None:
+        for rel in reversed(claimed):
+            os.rename(os.path.join(self.out, rel),
+                      os.path.join(self.staging, rel))
+        for d in reversed(self.made):
+            try:
+                os.rmdir(d)
+            except OSError:       # not empty: another writer's partition
+                pass
+
+    def publish_files(self) -> None:
+        """Move the staged top-level files (Spark's ``_SUCCESS``
+        marker) over the target's."""
+        for entry in os.scandir(self.staging):
+            if entry.is_file():
+                os.replace(entry.path, os.path.join(self.out, entry.name))
+
+    def remove_staging(self) -> None:
+        shutil.rmtree(self.staging, ignore_errors=True)
+
+
+class _HadoopClaims:
+    """Claims on any other filesystem with ``FileContext.rename`` and
+    ``Options.Rename.NONE``, which raises on any existing target; HDFS
+    checks and renames in one atomic step.  ``FileSystem.rename`` would
+    not do: onto an existing directory it returns true and nests the
+    source inside it."""
+
+    def __init__(self, spark: SparkSession, fs, out, staging_name: str):
+        jvm = spark._jvm
+        hfs = jvm.org.apache.hadoop.fs
+        self.gateway = spark.sparkContext._gateway
+        self.fs, self.out, self.path = fs, out, hfs.Path
+        self.staging = hfs.Path(out, staging_name)
+        self.fc = hfs.FileContext.getFileContext(
+            out.toUri(), spark._jsc.hadoopConfiguration())
+        rename = getattr(hfs, "Options$Rename")
+        self.none = self._options(rename, rename.NONE)
+        self.overwrite = self._options(rename, rename.OVERWRITE)
+        self.made: list = []
+
+    def _options(self, cls, value):
+        arr = self.gateway.new_array(cls, 1)
+        arr[0] = value
+        return arr
+
+    def exists(self, rel: str) -> bool:
+        return self.fs.exists(self.path(self.out, rel))
+
+    def _make_parents(self, rel: str) -> None:
+        parent = self.out
+        for part in rel.split("/")[:-1]:
+            parent = self.path(parent, part)
+            if not self.fs.exists(parent):
+                self.fs.mkdirs(parent)
+                self.made.append(parent)
+
+    def _is(self, e: Py4JJavaError, cls: str) -> bool:
+        return is_instance_of(self.gateway, e.java_exception, cls)
+
+    def claim(self, rel: str) -> bool:
+        src, dst = self.path(self.staging, rel), self.path(self.out, rel)
+        self._make_parents(rel)
+        try:
+            try:
+                self.fc.rename(src, dst, self.none)
+            except Py4JJavaError as e:
+                if not self._is(e, "java.io.FileNotFoundException"):
+                    raise
+                # a parent another writer made was removed by its
+                # rollback between our mkdirs and our rename
+                self._make_parents(rel)
+                self.fc.rename(src, dst, self.none)
+        except Py4JJavaError as e:
+            if self._is(e, "org.apache.hadoop.fs.FileAlreadyExistsException"):
+                return False
+            raise
+        return True
+
+    def unclaimed(self) -> list[str]:
+        """Files still below the staging directory's top level."""
+        top = self.staging.toUri().getPath().rstrip("/") + "/"
+        left, it = [], self.fs.listFiles(self.staging, True)
+        while it.hasNext():
+            rel = it.next().getPath().toUri().getPath()[len(top):]
+            if "/" in rel:
+                left.append(rel)
+        return left
+
+    def rollback(self, claimed: list[str]) -> None:
+        for rel in reversed(claimed):
+            self.fc.rename(self.path(self.out, rel),
+                           self.path(self.staging, rel), self.none)
+        for d in reversed(self.made):
+            try:
+                self.fs.delete(d, False)
+            except Py4JJavaError:     # not empty: another writer's partition
+                pass
+
+    def publish_files(self) -> None:
+        for st in self.fs.listStatus(self.staging):
+            if st.isFile():
+                src = st.getPath()
+                self.fc.rename(src, self.path(self.out, src.getName()),
+                               self.overwrite)
+
+    def remove_staging(self) -> None:
+        self.fs.delete(self.staging, True)
 
 
 def register_table(spark: SparkSession, spec: SinkSpec, path: str,
@@ -658,7 +882,7 @@ def compact_partitions(spark: SparkSession, path: str, fmt: str = "parquet",
                  and f.name in discovered]
     if not part_cols:
         raise ValueError(f"no Hive partition columns discovered under {path}")
-    ndf = _rebalance_by_keys(df, part_cols)
+    ndf = df.hint("rebalance", *map(F.col, part_cols))
     (ndf.write.mode("overwrite")
      .option("maxRecordsPerFile", str(target_rows_per_file))
      .partitionBy(*part_cols).format(fmt).save(tmp_path))
@@ -787,7 +1011,8 @@ def _discover_partition_cols(spark: SparkSession, path: str) -> set[str]:
         p = stack.pop()
         for status in fs.listStatus(p):
             if status.isDirectory() and "=" in status.getPath().getName():
-                names.add(status.getPath().getName().split("=", 1)[0])
+                names.add(unescape_path_name(
+                    status.getPath().getName().split("=", 1)[0]))
                 stack.append(status.getPath())
     return names
 

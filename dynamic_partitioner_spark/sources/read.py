@@ -65,13 +65,20 @@ _SUMMARY = ("_metadata", "_common_metadata")
 _PIN_LOCK = threading.Lock()
 
 
+def is_local_scheme(scheme: str | None) -> bool:
+    """Whether Hadoop filesystem ``scheme`` is the local disk: its
+    trees are listed on the driver, and a CREATE write claims its
+    partitions with ``os.rename``."""
+    return scheme == "file"
+
+
 def _pins(scheme: str | None) -> dict[str, str]:
     """Confs pinned while Spark resolves a tree on filesystem
     ``scheme``: partition columns stay STRING, and a local tree is
     listed on the driver however many directories it has.  Any other
     scheme keeps Spark's parallel listing."""
     pins = {_INFER: "false"}
-    if scheme == "file":
+    if is_local_scheme(scheme):
         pins[_LIST_THRESHOLD] = str(2**31 - 1)
     return pins
 

@@ -19,6 +19,8 @@ from dynamic_partitioner_spark import (
     read_payload,
     write_partitioned,
 )
+from dynamic_partitioner_spark.operators.partitioned_write import (
+    STAGING_PREFIX)
 
 
 def _partition_dirs(path: str, prefix: str) -> list[str]:
@@ -1325,3 +1327,291 @@ def test_normalize_resolves_dotted_column_names_exactly(spark):
     df2 = spark.createDataFrame([(3, " x ")], "v long, `region.code` string")
     with _pytest.raises(ValueError, match="plain names"):
         normalize_partition_keys(df2, ["region.code"])
+
+
+# ------------------------------------------- CREATE as a commit-time claim
+
+FORMATS = ["parquet", "orc", "avro"]
+
+
+def _create_spec(fmt: str, fields=("k",)) -> SinkSpec:
+    return SinkSpec(name="c", field_names=list(fields), fmt=fmt)
+
+
+def _batch(spark, keys, rows_per_key: int = 3):
+    return spark.createDataFrame(
+        [(k, i) for k in keys for i in range(rows_per_key)],
+        "k string, v long")
+
+
+def _staging_dirs(out: str) -> list[str]:
+    return [d for d in os.listdir(out) if d.startswith(STAGING_PREFIX)]
+
+
+def _tree_bytes(root: str) -> dict[str, bytes]:
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+def _keys_on_disk(spark, out: str, fields=("k",)) -> set:
+    return list_existing_partitions(spark, out, list(fields))
+
+
+def test_staging_name_is_hidden_and_not_a_partition():
+    from dynamic_partitioner_spark.sources.read import (_hidden,
+                                                        is_local_scheme)
+    assert STAGING_PREFIX.startswith(".") and "=" not in STAGING_PREFIX
+    assert _hidden(STAGING_PREFIX + "0123abcd")
+    assert is_local_scheme("file")
+    assert not any(map(is_local_scheme, ("hdfs", "s3a", "gs", None)))
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_create_concurrent_writers_exactly_one_wins(spark, tmp_path, fmt):
+    """Two CREATE writers of the same batch race for one target: the
+    claim lets exactly one through, the other raises, and the tree
+    holds one batch's rows and no staging directory."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    out = str(tmp_path / fmt)
+    batch = _batch(spark, ["a", "b", "c", "d"])
+    spec = _create_spec(fmt)
+    start = threading.Barrier(2, timeout=120)
+
+    def write():
+        start.wait()
+        try:
+            write_partitioned(batch, spec, out)
+            return "ok"
+        except PartitionExistsError:
+            return "clash"
+
+    with ThreadPoolExecutor(2) as pool:
+        outcomes = sorted(pool.map(lambda _: write(), range(2)))
+    assert outcomes == ["clash", "ok"]
+    assert _keys_on_disk(spark, out) == {("a",), ("b",), ("c",), ("d",)}
+    assert read_partitioned(spark, out, fmt).count() == 12
+    assert _staging_dirs(out) == []
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_create_partial_clash_rolls_back_every_claim(spark, tmp_path, fmt):
+    """Keys {a, b, c} against a target holding only b: a is claimed
+    first and moved back out on b's clash; c is never claimed; b keeps
+    its bytes."""
+    out = str(tmp_path / fmt)
+    spec = _create_spec(fmt)
+    write_partitioned(_batch(spark, ["b"], 1), spec, out)
+    before = _tree_bytes(os.path.join(out, "k=b"))
+    with pytest.raises(PartitionExistsError, match=r"\('b',\)"):
+        write_partitioned(_batch(spark, ["a", "b", "c"]), spec, out)
+    assert _keys_on_disk(spark, out) == {("b",)}
+    assert not os.path.exists(os.path.join(out, "k=a"))
+    assert not os.path.exists(os.path.join(out, "k=c"))
+    assert _tree_bytes(os.path.join(out, "k=b")) == before
+    assert _staging_dirs(out) == []
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_create_failed_write_leaves_nothing_visible(spark, tmp_path, fmt):
+    """A task that raises mid-job fails the write: no partition of the
+    batch appears (even those whose tasks finished) and the staging
+    directory is gone."""
+    out = str(tmp_path / fmt)
+    spec = _create_spec(fmt)
+    write_partitioned(_batch(spark, ["z"], 1), spec, out)
+    before = _tree_bytes(out)
+    bad = spark.range(40, numPartitions=4).select(
+        (F.col("id") % 8).cast("string").alias("k"),
+        F.when(F.col("id") == 37, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id")).alias("v"))
+    with pytest.raises(Exception, match="boom"):
+        write_partitioned(bad, spec, out)
+    assert _keys_on_disk(spark, out) == {("z",)}
+    assert _tree_bytes(out) == before
+    assert _staging_dirs(out) == []
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_create_two_level_keys_under_existing_parent(spark, tmp_path, fmt):
+    """A new leaf lands inside an existing parent directory; on a clash
+    a parent directory the claim created goes away with its leaf."""
+    out = str(tmp_path / fmt)
+    spec = _create_spec(fmt, ("a", "b"))
+    two = lambda keys: spark.createDataFrame(  # noqa: E731
+        [(a, b, 1) for a, b in keys], "a string, b string, v long")
+    write_partitioned(two([("1", "1")]), spec, out)
+    write_partitioned(two([("1", "2"), ("2", "1")]), spec, out)
+    assert _keys_on_disk(spark, out, ("a", "b")) == {
+        ("1", "1"), ("1", "2"), ("2", "1")}
+    with pytest.raises(PartitionExistsError, match=r"\('1', '1'\)"):
+        write_partitioned(two([("0", "5"), ("1", "1")]), spec, out)
+    assert not os.path.exists(os.path.join(out, "a=0"))
+    assert sorted(os.listdir(os.path.join(out, "a=1"))) == ["b=1", "b=2"]
+    assert read_partitioned(spark, out, fmt).count() == 3
+    assert _staging_dirs(out) == []
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_create_default_partition_value_is_claimed(spark, tmp_path, fmt):
+    out = str(tmp_path / fmt)
+    spec = _create_spec(fmt)
+    write_partitioned(_batch(spark, ["", "x"]), spec, out)
+    assert os.path.isdir(os.path.join(out, "k=__HIVE_DEFAULT_PARTITION__"))
+    with pytest.raises(PartitionExistsError, match=r"\('',\)"):
+        write_partitioned(_batch(spark, [""]), spec, out)
+    assert _keys_on_disk(spark, out) == {("",), ("x",)}
+    assert _staging_dirs(out) == []
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_create_existing_empty_leaf_is_a_clash(spark, tmp_path, fmt):
+    """``rename(2)`` would replace an empty target directory; the claim
+    refuses it, as the old existence probe did."""
+    out = str(tmp_path / fmt)
+    os.makedirs(os.path.join(out, "k=a"))
+    with pytest.raises(PartitionExistsError, match=r"\('a',\)"):
+        write_partitioned(_batch(spark, ["a", "b"]), _create_spec(fmt), out)
+    assert os.listdir(os.path.join(out, "k=a")) == []
+    assert not os.path.exists(os.path.join(out, "k=b"))
+    assert _staging_dirs(out) == []
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_create_empty_batch_tree(spark, tmp_path, fmt):
+    """An empty batch leaves what the unstaged write left: Spark's
+    ``_SUCCESS`` marker (Parquet, ORC) or an empty directory (Avro)."""
+    out = str(tmp_path / fmt)
+    write_partitioned(_batch(spark, []), _create_spec(fmt), out)
+    want = [] if fmt == "avro" else ["._SUCCESS.crc", "_SUCCESS"]
+    assert sorted(os.listdir(out)) == want
+
+
+def test_create_claims_through_filecontext_off_local_disk(
+        spark, tmp_path, monkeypatch):
+    """The claim used for non-``file`` schemes (``FileContext.rename``
+    with ``Options.Rename.NONE``), driven on the local disk: an
+    existing leaf, empty or not, is a clash, nothing nests inside it,
+    and the rollback restores the tree."""
+    from dynamic_partitioner_spark.operators import partitioned_write as PW
+    monkeypatch.setattr(PW, "is_local_scheme", lambda scheme: False)
+    out = str(tmp_path / "t")
+    spec = _create_spec("parquet")
+    write_partitioned(_batch(spark, ["b"], 1), spec, out)
+    os.makedirs(os.path.join(out, "k=d"))
+    before = _tree_bytes(out)
+    for keys, clash in ((["a", "b", "c"], "b"), (["c", "d"], "d")):
+        with pytest.raises(PartitionExistsError, match=f"'{clash}'"):
+            write_partitioned(_batch(spark, keys), spec, out)
+        assert _tree_bytes(out) == before
+        assert sorted(d for d in os.listdir(out) if "=" in d) == \
+            ["k=b", "k=d"]
+    assert os.listdir(os.path.join(out, "k=d")) == []
+    write_partitioned(_batch(spark, ["a", "c"]), spec, out)
+    assert _keys_on_disk(spark, out) == {("a",), ("b",), ("c",), ("d",)}
+    assert read_partitioned(spark, out).count() == 7
+    assert _staging_dirs(out) == []
+
+
+def test_create_into_existing_target_runs_only_the_write_jobs(spark,
+                                                              tmp_path):
+    """CREATE into a target that already has partitions launches the
+    same Spark jobs as an append of the same batch: the claim collects
+    no keys."""
+    from test_read_resolve import _jobs_during
+
+    batch = spark.range(100).selectExpr("cast(id % 10 as string) as k",
+                                        "id as v")
+    old = spark.range(20).selectExpr("cast(100 + id as string) as k",
+                                     "id as v")
+    create = _create_spec("parquet")
+    append = dataclasses.replace(create,
+                                 append_to_partition="CREATE_OR_APPEND")
+    targets = {}
+    for name, spec in (("create", create), ("append", append)):
+        targets[name] = str(tmp_path / name)
+        write_partitioned(old, spec, targets[name])
+    create_jobs = _jobs_during(
+        spark, lambda: write_partitioned(batch, create, targets["create"]))
+    append_jobs = _jobs_during(
+        spark, lambda: write_partitioned(batch, append, targets["append"]))
+    assert len(create_jobs) == len(append_jobs) >= 1
+    assert len(_keys_on_disk(spark, targets["create"])) == 30
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_create_escaped_column_name_is_claimed(spark, tmp_path, fmt):
+    """Spark escapes the partition column NAME as well as the value
+    (``a:b`` -> ``a%3Ab=``); the claim must list the staged tree with
+    that spelling, or it would find no partition and drop the batch."""
+    out = str(tmp_path / fmt)
+    spec = SinkSpec(name="c", field_names=["a:b"], fmt=fmt)
+    batch = spark.createDataFrame([("x", 1), ("y:z", 2)],
+                                  "`a:b` string, v long")
+    write_partitioned(batch, spec, out)
+    assert sorted(d for d in os.listdir(out) if "=" in d) == \
+        ["a%3Ab=x", "a%3Ab=y%3Az"]
+    assert list_existing_partitions(spark, out, ["a:b"]) == {("x",), ("y:z",)}
+    assert sorted(read_partitioned(spark, out, fmt).select("a:b", "v")
+                  .collect()) == [("x", 1), ("y:z", 2)]
+    assert _staging_dirs(out) == []
+    with pytest.raises(PartitionExistsError, match=r"\('x',\)"):
+        write_partitioned(batch, spec, out)
+    assert len(_tree_bytes(os.path.join(out, "a%3Ab=x"))) >= 1
+    assert _staging_dirs(out) == []
+
+
+@pytest.mark.parametrize("local", [True, False])
+def test_create_unclaimed_staged_files_keep_the_batch(
+        spark, tmp_path, monkeypatch, local):
+    """Should the staged listing miss part of the batch, the write
+    fails, publishes nothing and keeps the batch in the staging
+    directory instead of deleting it."""
+    from dynamic_partitioner_spark.operators import partitioned_write as PW
+    monkeypatch.setattr(PW, "is_local_scheme", lambda scheme: local)
+    monkeypatch.setattr(PW, "list_existing_partitions",
+                        lambda spark, path, fields: {("a",)})
+    out = str(tmp_path / "t")
+    with pytest.raises(RuntimeError, match="kept in .*" + STAGING_PREFIX):
+        write_partitioned(_batch(spark, ["a", "b"]), _create_spec("parquet"),
+                          out)
+    assert [d for d in os.listdir(out) if "=" in d or d == "_SUCCESS"] == []
+    (staging,) = _staging_dirs(out)
+    assert sorted(d for d in os.listdir(os.path.join(out, staging))
+                  if "=" in d) == ["k=a", "k=b"]
+
+
+@pytest.mark.parametrize("local", [True, False])
+def test_create_claim_recreates_a_parent_removed_under_it(
+        spark, tmp_path, monkeypatch, local):
+    """Another writer's rollback may remove a parent directory between
+    this writer's mkdir and its rename; the claim makes the parent
+    again and retries, instead of failing the write."""
+    from dynamic_partitioner_spark.operators import partitioned_write as PW
+    monkeypatch.setattr(PW, "is_local_scheme", lambda scheme: local)
+    cls = PW._LocalClaims if local else PW._HadoopClaims
+    make = cls._make_parents
+    raced = []
+
+    def racing(self, rel):
+        make(self, rel)
+        if not raced:
+            raced.append(rel)
+            os.rmdir(os.path.join(out, rel.split("/")[0]))
+            self.made.clear()
+
+    monkeypatch.setattr(cls, "_make_parents", racing)
+    out = str(tmp_path / "t")
+    spec = _create_spec("parquet", ("a", "b"))
+    write_partitioned(spark.createDataFrame(
+        [("1", "1", 1), ("2", "1", 2)], "a string, b string, v long"),
+        spec, out)
+    assert raced == ["a=1/b=1"]
+    assert _keys_on_disk(spark, out, ("a", "b")) == {("1", "1"), ("2", "1")}
+    assert _staging_dirs(out) == []

@@ -41,7 +41,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 AUDIT_KEYS = [
     "query_pruned_agg", "query_join_broadcast", "query_window_topk",
@@ -133,7 +134,7 @@ AUDIT_KEYS = [
 ]
 
 #: where the adjudicated per-key plan-feature snapshot lives
-EXPECTATIONS_PATH = "/root/repo/tools/plan_expectations.json"
+EXPECTATIONS_PATH = os.path.join(REPO, "tools", "plan_expectations.json")
 
 _KEEP = re.compile(
     r"Scan parquet|PushedFilters|PartitionFilters|ReadSchema|"
@@ -443,7 +444,7 @@ def main() -> int:
             f"exchanges={feats['exchanges']} broadcast_joins={feats['bhj']} "
             f"sortmerge_joins={feats['smj']}\n\n```\n{lines}\n```\n")
 
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write(
             "# Physical plan audit\n\n"
             f"Generated by `tools/audit_plans.py` at {sf_dir}.  For each\n"

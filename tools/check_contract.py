@@ -9,6 +9,7 @@ Usage: python tools/check_contract.py [sf_dir] [key ...]
 from __future__ import annotations
 
 import datetime as _dt
+import os
 import sys
 import time
 
@@ -16,7 +17,10 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+FAILURES = os.path.join(REPO, ".scratch", "failures")
+
+sys.path.insert(0, REPO)
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -132,7 +136,7 @@ def main() -> int:
     # accumulate unboundedly (ADVICE r8) — sweep them like every other
     # run-* dir (a dump survives until the NEXT contract run, which is
     # the window it gets inspected in)
-    _sweep_stale_dirs("/root/repo/.scratch/failures")
+    _sweep_stale_dirs(FAILURES)
 
     qs, oracles = E.queries(), E.oracle_sql()
     unknown = sorted(k for k in only if k not in qs)
@@ -190,8 +194,7 @@ def main() -> int:
             # are undiagnosable without the exact frame that mismatched.
             # Per-pid dir: a contention flake implies a CONCURRENT run,
             # which may fail on the same key and clobber this evidence
-            import os
-            dump = f"/root/repo/.scratch/failures/run-{os.getpid()}"
+            dump = f"{FAILURES}/run-{os.getpid()}"
             os.makedirs(dump, exist_ok=True)
             try:
                 sdf.to_parquet(f"{dump}/{key}.spark.parquet")

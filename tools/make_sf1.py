@@ -34,6 +34,7 @@ import sys
 
 import duckdb
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 REPLICAS = 10
 
 
@@ -61,7 +62,8 @@ def assert_single_space_tokens(con) -> None:
 
 
 def main() -> None:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1"
+    out = (sys.argv[1] if len(sys.argv) > 1
+           else os.path.join(REPO, ".scratch", "sf1"))
     src = "/root/testdata/sf0.1"
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()

@@ -52,7 +52,8 @@ import sys
 import duckdb
 
 REPLICAS = 10
-SRC = "/root/repo/.scratch/sf1"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SRC = os.path.join(REPO, ".scratch", "sf1")
 
 
 def assert_single_space_tokens(con) -> None:
@@ -79,7 +80,8 @@ def assert_single_space_tokens(con) -> None:
 
 
 def main() -> None:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf10"
+    out = (sys.argv[1] if len(sys.argv) > 1
+           else os.path.join(REPO, ".scratch", "sf10"))
     if not os.path.exists(f"{SRC}/documents.parquet"):
         sys.exit("build the sf1 corpus first: python tools/make_sf1.py")
     os.makedirs(out, exist_ok=True)

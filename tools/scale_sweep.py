@@ -16,11 +16,15 @@ the linear-at-scale claim is certified where data actually dominates.
 from __future__ import annotations
 
 import math
+import os
 import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SCALING_MD = os.path.join(REPO, "SCALING.md")
+
+sys.path.insert(0, REPO)
 
 SWEEP_KEYS = [
     # scans / aggregates / joins
@@ -129,8 +133,8 @@ SF1_KEYS = [
     "ops_zorder_layout",
 ]
 
-SF1_DIR = "/root/repo/.scratch/sf1"
-SF10_DIR = "/root/repo/.scratch/sf10"
+SF1_DIR = os.path.join(REPO, ".scratch", "sf1")
+SF10_DIR = os.path.join(REPO, ".scratch", "sf10")
 
 
 def merge_table_rows(md: str, new_lines: dict[str, tuple[str, float]]
@@ -291,7 +295,7 @@ def sf10_run() -> None:
     # A missing SCALING.md merges nothing instead of discarding the
     # whole (tens-of-minutes) measurement after the loop (r15 review)
     try:
-        with open("/root/repo/SCALING.md") as f:
+        with open(SCALING_MD) as f:
             md = f.read()
     except FileNotFoundError:
         md = ""
@@ -363,7 +367,7 @@ def sf10_run() -> None:
     # ``md`` was read above for the carry-over merge
     md = _replace_section(md, "## sf10 spot-run",
                           "\n".join(lines))
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(SCALING_MD, "w") as f:
         f.write(md)
     print("SCALING.md sf10 section written")
 
@@ -419,7 +423,7 @@ def sf1_run() -> None:
     # unmerged and a one-key run wiped every other sf1 row, r14).
     # Missing SCALING.md: merge nothing, keep the measurement (r15)
     try:
-        with open("/root/repo/SCALING.md") as f:
+        with open(SCALING_MD) as f:
             md = f.read()
     except FileNotFoundError:
         md = ""
@@ -428,7 +432,7 @@ def sf1_run() -> None:
         lines.append(ln)
     lines.append("")
     md = _replace_section(md, "## sf1 spot-run", "\n".join(lines))
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(SCALING_MD, "w") as f:
         f.write(md)
     print("SCALING.md sf1 section written")
 
@@ -541,13 +545,13 @@ def quantizer_run() -> None:
     for ln in lines:
         print(ln)
     try:
-        with open("/root/repo/SCALING.md") as f:
+        with open(SCALING_MD) as f:
             md = f.read()
     except FileNotFoundError:
         md = ""          # write the section alone, keep the timings
     md = _replace_section(md, "## quantizer micro-bench",
                           "\n".join(lines))
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(SCALING_MD, "w") as f:
         f.write(md)
     print("SCALING.md quantizer section written")
 
@@ -597,7 +601,7 @@ def main() -> None:
         # must not wipe the other ~200 adjudicated rows — same footgun
         # class as the _replace_section fix above)
         try:
-            with open("/root/repo/SCALING.md") as f:
+            with open(SCALING_MD) as f:
                 merge_table_rows(f.read(), new_lines)
         except FileNotFoundError:
             pass
@@ -633,14 +637,14 @@ def main() -> None:
     # r8 memory-note footgun, now structural)
     tail = ""
     try:
-        with open("/root/repo/SCALING.md") as f:
+        with open(SCALING_MD) as f:
             old = f.read()
         cut = old.find("\n## ")
         if cut != -1:
             tail = old[cut:]
     except FileNotFoundError:
         pass
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(SCALING_MD, "w") as f:
         f.write("\n".join(lines).rstrip("\n") + "\n" + tail)
     print("SCALING.md written (spot-run sections preserved)")
 
