@@ -6209,264 +6209,7 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_pw_single(spark, "/root/testdata/sf0.001")
 
 
-# The driver's correctness gate canonicalizes only the first ~50
-# ``queries()`` entries per round.  Rotate each round so the keys with
-# the LEAST driver evidence come first.  Round 14's window:
-#   first  ops_pruned_read_zorder (NEW this round — never-green keys
-#          auto-join every fold until certified),
-#   then   events_interval_union (r13-green but its key TEXT changed
-#          this round — the SQL twin gained the NULL-bound filter
-#          mirroring the Spark-side fix, r13 ADVICE #1 — and text
-#          changes must re-certify),
-#   then   the 25 round-8-evidence keys at the freshness budget (the
-#          r13 gate's boundary-slack warnings name exactly these —
-#          they hard-fail if unscheduled).  streaming_stateful_counts
-#          is among them and ALSO changed text this round (the
-#          deferred RocksDB provider flip, r13 verdict #1),
-#   then   23 of the 43 round-9-evidence keys, oldest first
-#          (alphabetical within the round: 1 + 1 + 25 + 23 = 50).
-# Positions 51+ carry the round-9 remainder (20 keys — they reach the
-# budget at r15 and lead the r15 fold), then the r10 cohort rotates in.
-_PRIORITY_R16 = [
-    # --- r16 optimization-round touched keys (text or operator
-    # internals changed; the driver must re-certify them first) ---
-    "ops_snapshot_manifest", "ops_pruned_read", "ops_pruned_read_zorder",
-    "ops_compact_execute", "source_time_travel", "ops_retention_vacuum",
-    "ops_orphan_files", "ops_incremental_scan",
-    "embedding_threshold_sweep", "streaming_late_audit",
-    "streaming_ttl_eviction", "source_csv_corrupt_audit",
-    # --- round-10 evidence (the 28 boundary-slack keys the r15 gate
-    # names; at budget — r17 hard-fails without this cohort) ---
-    "query_bloom_join", "query_bucketed_join", "query_decimal_agg",
-    "query_geo_join", "query_heavy_hitters", "query_incremental_agg",
-    "query_join_broadcast", "query_lag_features", "query_percentiles",
-    "query_pruned_agg", "query_quantile_bins", "query_rollup",
-    "query_rollup_grains", "query_unpivot", "query_window_topk",
-    "query_windowed_distinct", "sample_hash", "sample_mixture",
-    "sample_split", "similarity_int8_topk", "sorted_export_zorder",
-    "source_csv_roundtrip", "source_jsonl_roundtrip", "text_bpe_encode",
-    "text_bpe_learn", "text_bpe_pairs", "text_entropy", "text_winnow",
-    # --- fill to 50 from the round-11 cohort (oldest remaining
-    # evidence; includes the dedup family whose exact_dedup helper
-    # gained the _solo collision guard this round) ---
-    "corpus_pipeline", "corpus_quality_filter", "dedup_apply",
-    "dedup_clusters", "dedup_decontaminate", "dedup_embedding",
-    "dedup_fuzzy", "dedup_fuzzy2", "dedup_incremental",
-    "dedup_ngram_jaccard",
-    # (dedup_simhash rotated out to make room for the r16-retouched
-    # source_csv_corrupt_audit; its r11 evidence ages into the r17
-    # fold's r11 cohort)
-]
-
-
-_PRIORITY_R15 = [
-    # --- NEW this round (never driver-green until certified) ---
-    "ops_compact_execute",
-    # --- round-9 evidence (at budget; the r14 gate names all 22 —
-    # this cohort includes ALL FIVE core reference-sink keys) ---
-    "events_power", "events_range_join", "mm_dhash", "mm_mime_sniff",
-    "mm_resize", "mm_wav_stats", "nonnull_validation",
-    "ops_incremental_scan", "overwrite_dynamic", "partition_key_trim",
-    "partitioned_write_avro", "partitioned_write_multi",
-    "partitioned_write_orc", "partitioned_write_single",
-    "payload_projection", "query_basket_pairs", "query_gini",
-    "query_scd2", "similarity_bq_topk", "stage_tag",
-    "streaming_upsert", "text_phrases",
-    # --- key text changed mid-round (must re-certify): the r15
-    # relational-module sweep fixed null-unsafe grid joins
-    # (events_densify's oracle now joins IS NOT DISTINCT FROM, like
-    # the Spark side's eqNullSafe), the LOO denominator (count(xc),
-    # not count(*) — NULL targets deflated every encoding), the
-    # histogram sum rounding (floor trick on BOTH sides — F.round vs
-    # DuckDB round() diverges on 3rd-decimal midpoints), and the
-    # explicit NULL-user exclusion in the cohort pair (both sides).
-    # events_bursts got the same null-safe grid fix but already sits
-    # in this fold above.  embedding_threshold_sweep's twin gained
-    # the NaN-vector exclusion (NaN l2 > 0 is TRUE both engines — a
-    # NaN pair hard-crashed the DuckDB cast; r15 similarity sweep).
-    # The r15 text sweep changed two more twins: CANON_URL_SQL
-    # (tracking-param runs collapse in one pass — the 5-param GA set
-    # previously left extras; default ports drop behind password
-    # userinfo; a trailing '/' inside a query VALUE is preserved) and
-    # WORD_REPETITION_RATIO_SQL (non-whitespace-run tokens — the
-    # phantom empty token under-reported repetition), so dedup_url
-    # and text_signals re-certify too.  Eight untouched r10-cohort
-    # keys (query_heavy_hitters, query_incremental_agg,
-    # query_join_broadcast, query_lag_features, query_percentiles,
-    # query_pruned_agg, query_quantile_bins, query_rollup) are
-    # displaced below the fold in exchange and lead the r16 rotation.
-    # The r15 sampling sweep changed two more twins: the temperature
-    # normalization now excludes NULL sources on BOTH sides (their
-    # quota mass was silently lost — unsampleable rows inflated S),
-    # and the epoch-shuffle shard clamps the documented u == 1.0 hash
-    # edge on BOTH sides (shard == n_shards escaped the [0, n) range).
-    # The r15 zorder sweep changed zorder_key_sql (each input now
-    # CAST AS BIGINT like the Spark side's .cast("long") — a 32-bit
-    # DuckDB column overflowed at shift >= 31 while the Spark twin
-    # worked), which re-renders the two oracles built from it, so
-    # ops_zorder_layout and ops_pruned_read_zorder re-certify;
-    # query_bloom_join and query_bucketed_join displace in exchange.
-    "events_densify", "query_target_encoding", "query_histogram",
-    "events_retention", "events_cohort_value",
-    "embedding_threshold_sweep", "dedup_url", "text_signals",
-    "sample_temperature", "sample_epoch_shuffle",
-    "ops_zorder_layout", "ops_pruned_read_zorder",
-    # --- round-10 evidence, oldest first (alphabetical within);
-    # fill to the 50-key fold ---
-    "events_attribution", "events_bursts", "events_conformance",
-    "events_cumulative_users", "events_delay_audit", "events_ohlc",
-    "events_seq_lm", "mm_dedup_binary", "mm_tar_shards",
-    "ops_file_audit", "ops_metadata_files", "ops_orphan_files",
-    "privacy_l_diversity", "privacy_pseudonymize",
-    "quality_expectations",
-    # ---- fold: the driver checks the 50 above ----
-    # below the fold, r16 rotation order: the round-10 remainder
-    # (they reach the 5-round freshness budget at r16 — refresh them
-    # FIRST; the twelve displaced above lead), then the round-11
-    # cohort.  sample_temperature and sample_epoch_shuffle moved UP
-    # into the fold (twin changes), so two r10 keys displace in
-    # exchange; query_bloom_join and query_bucketed_join displaced
-    # for the zorder twin re-certification the same way.
-    "query_bloom_join", "query_bucketed_join",
-    "query_decimal_agg", "query_geo_join",
-    "query_heavy_hitters", "query_incremental_agg",
-    "query_join_broadcast", "query_lag_features", "query_percentiles",
-    "query_pruned_agg", "query_quantile_bins", "query_rollup",
-    "query_rollup_grains", "query_unpivot", "query_window_topk",
-    "query_windowed_distinct", "sample_hash", "sample_mixture",
-    "sample_split", "similarity_int8_topk",
-    "sorted_export_zorder", "source_csv_roundtrip",
-    "source_jsonl_roundtrip", "text_bpe_encode", "text_bpe_learn",
-    "text_bpe_pairs", "text_entropy", "text_winnow",
-]
-
-# Round 14's window, kept for the freshness gate's fold-history scan.
-_PRIORITY_R14 = [
-    # --- NEW this round (never driver-green until certified) ---
-    "ops_pruned_read_zorder",
-    # --- key text changed this round (must re-certify):
-    # events_interval_union (NULL-bound filter added to BOTH the
-    # operator and interval_union_sql, which renders into the oracle)
-    "events_interval_union",
-    # --- round-8 evidence (at budget; r13 gate names them).
-    # streaming_stateful_counts additionally flipped to the RocksDB
-    # state-store provider this round (key-text change, in-fold) ---
-    "embedding_pca", "embedding_roundtrip", "events_ab_test",
-    "graph_pagerank", "mm_binary_stats", "mm_frame_sample",
-    "query_cube", "query_pivot", "query_sql_window_frames",
-    "similarity_ann_ivf", "similarity_ann_lsh",
-    "similarity_ivf_pruned", "similarity_pq_rerank", "sorted_export",
-    "source_binaryfile", "source_fixed_width_roundtrip",
-    "source_xml_roundtrip", "streaming_dedup", "streaming_join",
-    "streaming_partitioned_write", "streaming_stateful_counts",
-    "streaming_windowed_agg", "text_bm25_retrieve", "text_pack",
-    "text_rake",
-    # --- round-9 evidence, oldest first (alphabetical within) ---
-    "append_mode", "cdc_apply", "dedup_containment",
-    "dedup_embedding_lsh", "dedup_exact", "dedup_minhash",
-    "dedup_semantic", "dedup_survivorship", "embedding_grammian",
-    "embedding_prefix_eval", "embedding_quantize", "events_anomaly",
-    "events_asof_join", "events_asof_nearest", "events_cuped",
-    "events_densify", "events_did", "events_drift_chi2",
-    "events_json_extract",
-    # --- key text changed mid-round (must re-certify): the dp-release
-    # oracles gained the Laplace ln(0)-edge clamp and the
-    # collision-free seed sentinel (r14 privacy review) — both twins
-    # render into these keys' oracle_sql().  events_power and
-    # events_range_join (r9 evidence, untouched, budget-safe until
-    # r15) are displaced below the fold in exchange.
-    "privacy_dp_count", "privacy_dp_sum",
-    "graph_neighbor_jaccard",
-    # --- key text changed mid-round (must re-certify): the
-    # embedding_outliers oracle gained the NULL-vector filter
-    # mirroring the Spark-side fix (r14 review — a NULL vector's NULL
-    # cosine sorted NULLS-FIRST into Spark's bottom_k where DuckDB
-    # sorted it LAST).  mm_dhash (r9 evidence, untouched, budget-safe
-    # until r15) is displaced below the fold in exchange and leads the
-    # r15 rotation.
-    "embedding_outliers",
-    # ---- fold: the driver checks the 50 above ----
-    # below the fold, r15 rotation order: the round-9 remainder (they
-    # reach the 5-round freshness budget at r15 — refresh them FIRST),
-    # then the round-10 cohort
-    "events_power", "events_range_join",
-    "mm_dhash", "mm_mime_sniff", "mm_resize", "mm_wav_stats",
-    "nonnull_validation", "ops_incremental_scan", "overwrite_dynamic",
-    "partition_key_trim", "partitioned_write_avro",
-    "partitioned_write_multi", "partitioned_write_orc",
-    "partitioned_write_single", "payload_projection",
-    "query_basket_pairs", "query_gini",
-    "query_scd2", "similarity_bq_topk", "stage_tag",
-    "streaming_upsert", "text_phrases",
-]
-
-# Round 13's window, kept for the freshness gate's fold-history scan
-# (it resolves the shipped fold from the LAST _PRIORITY_R* name, and
-# earlier rounds' lists document when each cohort last certified).
-_PRIORITY_R13 = [
-    # --- NEW this round (never driver-green until certified) ---
-    "ops_pruned_read",
-    # --- key text changed this round (must re-certify):
-    # streaming_ttl_eviction (shared eviction cutoff + RocksDB),
-    # events_rfm / query_auc (NULL-handling fixes applied to BOTH the
-    # operator and its SQL twin in the r13 hardening pass — the twins
-    # render into oracle_sql(), so the key text changed).  The two
-    # displaced r8-cohort keys (mm_frame_sample, mm_binary_stats, the
-    # only in-fold r8 keys whose operators r13 did NOT touch) lead the
-    # below-fold r14 block instead.
-    "streaming_ttl_eviction", "events_rfm", "query_auc",
-    # sampling twins fixed in the same pass (NULL-key engine parity,
-    # bootstrap tail-cap, topk tie-break) — five more untouched
-    # r8-cohort keys displaced below the fold in exchange
-    "sample_balance_labels", "sample_bootstrap", "sample_cap_group",
-    "sample_neyman", "sample_topk",
-    # URL canonicalizer fixed on both sides (path-&ref truncation +
-    # $-anchor engine divergence) — query_cube displaced in exchange
-    "dedup_url",
-    # --- round-7 evidence (at budget; r12 gate names them) ---
-    "query_sql_tpch_q22", "query_sql_tpch_q8", "query_sql_tpch_q9",
-    "sample_importance", "sample_kfold", "sample_stratified",
-    "sketch_cms", "source_csv_corrupt_audit", "text_chunk",
-    "text_chunk_dedup", "text_hashed_vector", "text_langid_confusion",
-    "text_lm_score", "text_readability", "text_repetition",
-    "text_template_skeleton", "text_tfidf", "text_token_ids",
-    "text_vocab",
-    # --- round-8 evidence, oldest first (alphabetical within) ---
-    "catalog_table", "events_interval_union",
-    "merge_upsert", "mm_binary_roundtrip",
-    "mm_decode_png", "mm_features", "mm_png_meta",
-    "ops_retention_vacuum", "partition_compact",
-    "partitioned_write_transforms", "privacy_k_anon",
-    "query_distinct_agg", "query_event_gaps", "query_grouping_sets",
-    "query_histogram", "query_profile",
-    "query_salted_join", "query_semi_anti", "query_set_ops",
-    "query_sliding_window", "query_snapshot_diff",
-    # ---- fold: the driver checks the 50 above ----
-    # below the fold, r14 rotation order: the round-8 remainder (they
-    # reach the 5-round freshness budget at r14 — refresh them FIRST),
-    # then the round-9 cohort
-    "mm_frame_sample", "mm_binary_stats", "query_cube",
-    "embedding_pca",
-    "embedding_roundtrip", "events_ab_test", "graph_pagerank",
-    "query_pivot",
-    "query_sql_window_frames", "similarity_ann_ivf",
-    "similarity_ann_lsh", "similarity_ivf_pruned",
-    "similarity_pq_rerank", "sorted_export", "source_binaryfile",
-    "source_fixed_width_roundtrip", "source_xml_roundtrip",
-    "streaming_dedup", "streaming_join", "streaming_partitioned_write",
-    "streaming_stateful_counts", "streaming_windowed_agg",
-    "text_bm25_retrieve", "text_pack", "text_rake",
-]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    base = _all_queries()
-    out = {k: base[k] for k in _PRIORITY_R16}
-    out.update((k, v) for k, v in base.items() if k not in out)
-    return out
-
-
-def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "partitioned_write_single": q_pw_single,
         "partitioned_write_multi": q_pw_multi,

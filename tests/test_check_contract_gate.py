@@ -1,10 +1,13 @@
-"""Negative tests for the local contract gate itself (r11 VERDICT #6):
+"""Negative tests for the contract gate itself:
 the dtype-kind check and the HUGEINT sweep currently prove the FIXED
 state; these fixtures prove the gate still REDS the broken state, so a
-future loosening of either gate fails loudly."""
+future loosening of either gate fails loudly.  The writer-debris sweep
+the gate runs after its key pass must count exactly the crash-debris
+class and nothing else."""
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 import sys
 
@@ -101,3 +104,48 @@ def test_normalize_array_cells_raise_value_error_class():
     import inspect as _inspect
     src = _inspect.getsource(CC.main)
     assert "(TypeError, ValueError)" in src
+
+
+def _mk(p):
+    os.makedirs(p, exist_ok=True)
+
+
+def test_sweep_clean_scratch_is_zero(tmp_path):
+    d = str(tmp_path)
+    _mk(f"{d}/tbl/pk=A")
+    open(f"{d}/tbl/pk=A/part-0.parquet", "w").close()
+    # versioned table whose every batch is referenced
+    _mk(f"{d}/vt/_log")
+    _mk(f"{d}/vt/batch-00000001")
+    json.dump({"version": 1, "mode": "append",
+               "dirs": ["batch-00000001"]},
+              open(f"{d}/vt/_log/00000001.json", "w"))
+    assert CC.sweep_writer_debris(d) == (0, [])
+
+
+def test_sweep_flags_temporary_and_unreferenced_batches(tmp_path):
+    d = str(tmp_path)
+    _mk(f"{d}/tbl/_temporary/0")          # committer staging debris
+    _mk(f"{d}/vt/_log")
+    _mk(f"{d}/vt/batch-00000001")          # referenced
+    _mk(f"{d}/vt/batch-00000002")          # crash debris: no commit
+    json.dump({"version": 1, "mode": "append",
+               "dirs": ["batch-00000001"]},
+              open(f"{d}/vt/_log/00000001.json", "w"))
+    n, dirs = CC.sweep_writer_debris(d)
+    assert n == 2
+    assert set(dirs) == {"tbl/_temporary", "vt/batch-00000002"}
+
+
+def test_sweep_skips_intentional_orphan_plants(tmp_path):
+    """ops_orphan_files plants two orphans BY DESIGN — counting them
+    would make every healthy contract run read nonzero."""
+    d = str(tmp_path)
+    _mk(f"{d}/ops_orphan_files/_log")
+    _mk(f"{d}/ops_orphan_files/batch-00000099")
+    _mk(f"{d}/ops_orphan_files/stray-export")
+    assert CC.sweep_writer_debris(d) == (0, [])
+
+
+def test_sweep_missing_scratch_is_zero(tmp_path):
+    assert CC.sweep_writer_debris(str(tmp_path / "nope")) == (0, [])

@@ -17,30 +17,35 @@ def _entry():
     return m
 
 
-def test_every_oracle_has_a_query_and_priorities_resolve():
-    import re
-
+def test_every_oracle_has_a_query():
     m = _entry()
     q, o = m.queries(), m.oracle_sql()
     assert set(o) <= set(q), sorted(set(o) - set(q))
-    # resolve the rotation list by pattern (the same resolution
-    # check_freshness uses) so this test never needs a rename edit
-    pri_names = sorted((n for n in dir(m)
-                        if re.fullmatch(r"_PRIORITY_R\d+", n)),
-                       key=lambda n: int(n.rsplit("R", 1)[1]))
-    assert pri_names, "no _PRIORITY_R<n> rotation list defined"
-    pri = getattr(m, pri_names[-1])
-    assert set(pri) <= set(q), sorted(set(pri) - set(q))
-    assert len(set(pri)) == len(pri), \
-        "duplicate keys in priority rotation"
     # r9 flipped the last rows-only key (text_bpe_learn) to hash-pass
     # via learn_bpe_certified: exact first-merge columns recomputed by
     # the SQL twin + hard combinatorial invariants on the iterative
     # tail — every key now has an oracle
     rows_only = set(q) - set(o)
     assert rows_only == set(), sorted(rows_only)
-    # priority rotation covers every NEW key first (never hash-checked)
     assert len(q) >= 124
+
+
+def test_full_contract_matches_duckdb():
+    """Every ``queries()`` key at sf0.01 returns the same row count,
+    schema and values as its DuckDB ``oracle_sql()`` twin.  Runs the
+    ``tools/check_contract.py`` CLI (its default corpus is sf0.01) in
+    its own process, so runtime confs left behind by other tests
+    cannot leak into the check."""
+    import subprocess
+
+    r = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "check_contract.py")],
+        capture_output=True, text=True)
+    lines = r.stdout.splitlines()
+    not_ok = [ln for ln in lines if ln.strip() and not ln.startswith("ok ")]
+    assert r.returncode == 0 and lines and lines[-1] == "ALL OK", (
+        f"check_contract.py exited {r.returncode}:\n" + "\n".join(not_ok)
+        + "\n--- stderr tail ---\n" + r.stderr[-2000:])
 
 
 def test_oracle_sql_is_syntactically_valid_duckdb():
@@ -152,19 +157,6 @@ def test_rake_oracle_stopword_alternation_in_sync():
         f"functions.text._STOPWORDS — regenerate as {want!r}")
 
 
-def test_freshness_budget_holds():
-    """Every key with stale driver evidence (never green, text newer
-    than its last green row, or older than the 5-round budget) must
-    sit inside the upcoming fold — stale-and-unscheduled keys were
-    r8's only real findings (tools/check_freshness.py)."""
-    import subprocess
-    import sys as _sys
-    r = subprocess.run(
-        [_sys.executable, os.path.join(REPO, "tools/check_freshness.py")],
-        capture_output=True, text=True)
-    assert r.returncode == 0, r.stdout + r.stderr
-
-
 def test_no_hugeint_oracle_columns():
     """No oracle may return HUGEINT/UHUGEINT columns (r10 VERDICT #2):
     DuckDB's ``sum(BIGINT)`` widens to HUGEINT, which ``.df()``
@@ -193,62 +185,30 @@ def test_no_hugeint_oracle_columns():
         f"CAST(... AS BIGINT)): {offenders}")
 
 
-def test_freshness_slack_and_never_green_semantics():
-    """Pin the r11 gate redesign (r10 VERDICT #3 + #7) on synthetic
-    evidence: one round of age-overage during the boundary window
-    (fold round == current - 1) WARNS; two+ rounds, text-newer, and
-    never-green keys FAIL regardless of slack — a never-green key
-    auto-joins every fold until green."""
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    import check_freshness as CF
+def test_certify_booleans_raises_on_null_and_false(spark):
+    """The ops_* loud-certification helper: a FALSE invariant raises,
+    and so does a NULL one — the missing-partition-key case (audits
+    are built with source counts as the LEFT side, so a pk that
+    vanished from the physical write shows up as nulls, which must be
+    as loud as an explicit violation)."""
+    import pytest
 
-    fps = {k: "f" for k in
-           ("age1", "age2", "textnew", "nevergreen", "infold")}
-    manifest = {
-        "age1": {"fp": "f", "text_round": 1},
-        "age2": {"fp": "f", "text_round": 1},
-        "textnew": {"fp": "OLD", "text_round": 1},   # fp mismatch
-        "nevergreen": {"fp": "f", "text_round": 1},
-        "infold": {"fp": "f", "text_round": 1},
-    }
-    # current=12, budget 5: age1 green r6 (over by 1), age2 green r5
-    # (over by 2), textnew green r11 but text changed now, infold
-    # never green but scheduled
-    green = {"age1": 6, "age2": 5, "textnew": 11}
-    fold = {"infold"}
+    m = _entry()
 
-    # boundary window: fold r11, current 12
-    changed, stale, problems, warnings = CF.evaluate(
-        12, green, fps, manifest, fold, fold_round=11)
-    assert changed == ["textnew"]
-    assert stale == {"age1", "age2", "textnew", "nevergreen", "infold"}
-    assert [w.split(":")[0] for w in warnings] == ["age1"]
-    assert sorted(p.split(":")[0] for p in problems) == \
-        ["age2", "nevergreen", "textnew"]
+    ok = spark.createDataFrame([("A", True), ("B", True)],
+                               "pk string, inv boolean")
+    m._certify_booleans("k", ok, ["inv"])  # no raise
 
-    # fold for the current round shipped: no slack, age1 fails too
-    _, _, problems2, warnings2 = CF.evaluate(
-        12, green, fps, manifest, fold, fold_round=12)
-    assert warnings2 == []
-    assert sorted(p.split(":")[0] for p in problems2) == \
-        ["age1", "age2", "nevergreen", "textnew"]
+    bad = spark.createDataFrame([("A", True), ("B", False)],
+                                "pk string, inv boolean")
+    with pytest.raises(RuntimeError, match="B: inv=False"):
+        m._certify_booleans("k", bad, ["inv"])
 
-
-def test_freshness_flags_red_regression_after_old_green():
-    """r15 review pin: a key green in an old round but RED in a newer
-    one (a regression) is stale with no slack — previously the
-    latest-any-round map was discarded and the regressed key passed
-    the gate as fresh for up to two more rounds."""
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    import check_freshness as CF
-
-    fps = {"regressed": "f", "fine": "f"}
-    manifest = {"regressed": {"fp": "f", "text_round": 1},
-                "fine": {"fp": "f", "text_round": 1}}
-    green = {"regressed": 12, "fine": 14}
-    seen = {"regressed": 14, "fine": 14}   # red row in r14
-    _, stale, problems, warnings = CF.evaluate(
-        15, green, fps, manifest, fold=set(), fold_round=15, seen=seen)
-    assert "regressed" in stale and "fine" not in stale
-    assert [p.split(":")[0] for p in problems] == ["regressed"]
-    assert "is red" in problems[0] and warnings == []
+    null = spark.createDataFrame([("A", True), ("C", None)],
+                                 "pk string, inv boolean")
+    obs = spark.createDataFrame([("A", "f1", 3)],
+                                "pk string, f string, n long")
+    with pytest.raises(RuntimeError) as ei:
+        m._certify_booleans("k", null, ["inv"], obs)
+    assert "C: inv=None" in str(ei.value)
+    assert "('A', 'f1', 3)" in str(ei.value)  # diagnostic decomposition

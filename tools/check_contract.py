@@ -1,9 +1,13 @@
-"""Local replica of the driver's correctness gate: run every
+"""The repository's correctness gate: run every
 ``__spark_entry__.queries()`` entry at the given SF and compare against
 ``oracle_sql()`` via DuckDB — row count, schema (column names sorted),
-and order-insensitive values.
+and order-insensitive values.  Tier-1 runs it over every key at sf0.01
+(``tests/test_entry_contract.py::test_full_contract_matches_duckdb``).
 
 Usage: python tools/check_contract.py [sf_dir] [key ...]
+
+Prints one ``ok``/``FAIL`` line per key, then ``ALL OK`` (exit 0) or
+``<n> FAILURES`` (exit 1).
 """
 
 from __future__ import annotations
@@ -123,6 +127,48 @@ def compare(key: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[str
     return problems
 
 
+def sweep_writer_debris(scratch: str) -> tuple[int, list[str]]:
+    """Writer-debris canary: after the full-key pass, sweep the run's
+    own scratch outputs for crash debris — committer staging dirs
+    (``_temporary``) anywhere, plus unreferenced batch dirs inside
+    versioned tables (the commit-log contract comes from
+    ``operators/versioned.py`` itself: a hand-rolled copy would
+    silently flag every healthy batch if the log schema changed; the
+    ``ops_orphan_files`` table is skipped because it plants two
+    orphans by design).  Local directory listings only, no Spark job."""
+    from dynamic_partitioner_spark.operators.versioned import (
+        is_batch_shaped, unreferenced_dirs)
+    debris: list[str] = []
+    errors: list[str] = []
+    if not os.path.isdir(scratch):
+        return 0, debris
+    for root, dirs, _files in os.walk(scratch):
+        for d in list(dirs):
+            if d == "_temporary":
+                debris.append(os.path.relpath(os.path.join(root, d),
+                                              scratch))
+                dirs.remove(d)
+    for table in sorted(os.listdir(scratch)):
+        tdir = os.path.join(scratch, table)
+        if table == "ops_orphan_files" \
+                or not os.path.isdir(os.path.join(tdir, "_log")):
+            continue
+        try:
+            debris.extend(f"{table}/{name}"
+                          for name in unreferenced_dirs(tdir)
+                          if is_batch_shaped(name))
+        except Exception as exc:
+            # the sweep's premise is post-crash state of unknown
+            # shape: an unreadable/corrupt commit file must not
+            # discard the results of the multi-minute query pass —
+            # surface it as a visible marker instead of raising
+            errors.append(f"{table}/_log!{type(exc).__name__}")
+    # markers ride along in the dirs list for diagnosis but do NOT
+    # count as debris — a transient sweep error must not flip the
+    # canary to "crash debris implicated"
+    return len(debris), (debris + errors)[:20]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -204,9 +250,7 @@ def main() -> int:
                 print(f"     (dump failed: {exc})")
         else:
             print(f"ok   {key}: {len(sdf)} rows match ({time.time() - t0:.1f}s)")
-    # writer-debris canary (r9 VERDICT #7): same sweep bench.py records
-    import bench as _bench
-    seen, dirs = _bench.sweep_writer_debris(E.SCRATCH)
+    seen, dirs = sweep_writer_debris(E.SCRATCH)
     print(f"# orphan_dirs_seen={seen}" + (f" {dirs}" if dirs else ""))
     print(f"\n{'ALL OK' if n_fail == 0 else f'{n_fail} FAILURES'}")
     return 1 if n_fail else 0
