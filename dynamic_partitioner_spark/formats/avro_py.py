@@ -20,7 +20,10 @@ executor-side:
   * **write**: one ``applyInPandas`` group per partition-key tuple —
     the same per-key writer fan-out the reference's CDAP
     ``DynamicPartitioner`` does (SURVEY.md §3 E3) — each group encodes
-    its rows to one container file under ``k=v/`` Hive layout.
+    its rows to one container file under ``k=v/`` Hive layout.  The
+    writer only appends: CREATE and dynamic overwrite point it at
+    ``write_partitioned``'s staging directory and commit from there,
+    as for Parquet and ORC.
   * **read**: Spark's ``binaryFile`` source lists + reads files in
     parallel; ``mapInPandas`` decodes blocks; partition-key columns are
     parsed from the file path exactly like Spark's own partition
@@ -46,8 +49,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MAGIC = b"Obj\x01"
-#: suffix of a partition directory an overwrite has moved aside
-MOVED_ASIDE = "._overwrite_old"
 
 # --------------------------------------------------------------- schema
 
@@ -389,9 +390,8 @@ def _hive_dir(field_names: list[str], key: tuple) -> str:
 
 
 def write_avro_partitioned(df: DataFrame, field_names: list[str],
-                           path: str, codec: str = "deflate",
-                           overwrite_partitions: bool = False) -> str:
-    """Hive-partitioned Avro write without the spark-avro jar.
+                           path: str, codec: str = "deflate") -> str:
+    """Hive-partitioned Avro append without the spark-avro jar.
 
     One ``applyInPandas`` group per distinct key tuple → one container
     file per partition directory (the reference's one-writer-per-key
@@ -400,16 +400,12 @@ def write_avro_partitioned(df: DataFrame, field_names: list[str],
     task — acceptable for the fallback path; the spark-avro fast path
     handles skew via REBALANCE in ``write_partitioned``.
 
-    ``overwrite_partitions`` gives the fallback the same dynamic-
-    overwrite semantics as the parquet/orc path: partition dirs present
-    in the incoming data are moved aside (``._overwrite_old``), the
-    write runs, then the old dirs are deleted; a failed write restores
-    them.  That overwrite's distinct-keys collect is bounded by the
-    partition count.  A CREATE write collects no keys here:
-    ``write_partitioned`` points ``path`` at its staging directory and
-    claims the partitions written there afterwards.  The fallback
-    writer requires a POSIX-visible output path on all executors (it
-    already writes through the local file API).
+    The write appends into ``path`` and collects no keys.  A CREATE or
+    dynamic-overwrite write through ``write_partitioned`` points
+    ``path`` at its staging directory and commits the partitions
+    written there afterwards.  A failed write removes the files of its
+    own job.  The fallback writer requires a POSIX-visible output path
+    on all executors (it writes through the local file API).
     """
     import pandas as pd
 
@@ -447,63 +443,13 @@ def write_avro_partitioned(df: DataFrame, field_names: list[str],
         # a real payload column named '__null_x' would duplicate the
         # mask's label and crash pandas inside the per-group writer
         # (duplicate-label indexing) — refuse loudly up front, the
-        # partitioned_write '_stage' clash pattern (r15 review).
-        # BEFORE the move-aside below: raising after it would strand
-        # every moved partition invisible with nothing written
-        # (r15 diff review)
+        # partitioned_write '_stage' clash pattern (r15 review)
         raise ValueError(
             f"columns {[f'__null_{c}' for c in clash]} collide with "
             "the writer's internal null-mask labels; rename them")
 
-    moved: list[tuple[str, str]] = []
-    collected_rels: set[str] = set()
-    if overwrite_partitions:
-        keys = [tuple(str(r[f]) for f in field_names)
-                for r in df.select(*field_names).distinct().collect()]
-        # PHASE 1 — validate every target before renaming ANY: the old
-        # single pass raised on a leftover AFTER renaming earlier keys
-        # aside, stranding them invisible to readers with nothing
-        # written (r15 review)
-        renames: list[tuple[str, str]] = []
-        for key in keys:
-            rel = _hive_dir(field_names, key)
-            collected_rels.add(rel)
-            target = os.path.join(path, rel)
-            if os.path.isdir(target):
-                old = target.rstrip("/") + MOVED_ASIDE
-                if os.path.isdir(old):
-                    # leftover from a crashed run: it may hold the ONLY
-                    # good copy of this partition (the live dir could be
-                    # a partial rewrite) — deciding which to keep needs
-                    # an operator, not an rmtree (r13 review)
-                    raise RuntimeError(
-                        f"{old} already exists — a previous overwrite "
-                        f"crashed mid-swap.  Inspect it against "
-                        f"{target}, keep the good copy at {target}, "
-                        "delete the other, then re-run")
-                renames.append((target, old))
-        # PHASE 2 — rename, rolling back on any OS failure so a
-        # partial move-aside never hides live partitions
-        try:
-            for target, old in renames:
-                os.rename(target, old)
-                moved.append((target, old))
-        except OSError:
-            for target, old in reversed(moved):
-                os.rename(old, target)
-            raise
-
     def write_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         rel = _hive_dir(field_names, key)
-        if any(seg.endswith(MOVED_ASIDE) for seg in rel.split("/")):
-            # a legitimate VALUE ending in the move-aside marker would
-            # collide with the crash-recovery scheme: its files are
-            # excluded from every read (list_avro_containers filters
-            # the marker) and overwrites of the sibling value are
-            # spuriously refused as crashed swaps (r15 review)
-            raise ValueError(
-                f"partition directory {rel!r} ends with the reserved "
-                "overwrite marker '._overwrite_old'; rename the value")
         target = os.path.join(path, rel)
         os.makedirs(target, exist_ok=True)
         rel_md5 = hashlib.md5(rel.encode())
@@ -555,11 +501,7 @@ def write_avro_partitioned(df: DataFrame, field_names: list[str],
     stats = (masked.groupBy(*field_names)
              .applyInPandas(write_group, out_schema))
     try:
-        # materialize = run the write; the per-partition rows are the
-        # ground truth of what the write ACTUALLY produced, which the
-        # overwrite reconciliation below compares against the pre-write
-        # key scan (the relation is partition-sized, not row-sized)
-        written_rels = {r["partition"] for r in stats.collect()}
+        stats.collect()                    # materialize = run the write
     except Exception:
         # remove THIS job's own partial output: succeeded tasks'
         # files are token-unique, and a caller's whole-call retry
@@ -573,96 +515,20 @@ def write_avro_partitioned(df: DataFrame, field_names: list[str],
                 os.remove(f)
             except OSError:
                 pass
-        if moved:                          # failed overwrite: restore
-            import shutil
-            for target, old in moved:
-                shutil.rmtree(target, ignore_errors=True)
-                if os.path.isdir(old):
-                    os.rename(old, target)
         raise
-    if overwrite_partitions:
-        _reconcile_overwrite(path, moved, collected_rels, written_rels,
-                             job_token)
     return path
-
-
-def _reconcile_overwrite(path: str, moved: list[tuple[str, str]],
-                         collected_rels: set[str],
-                         written_rels: set[str],
-                         job_token: str) -> None:
-    """Reconcile an overwrite's pre-write key scan against what the
-    write job actually produced: the two are separate evaluations of
-    the input DataFrame, and a non-deterministic input (rand-derived
-    key, source changing between jobs) makes them diverge — both
-    directions were SILENT corruption before (r15 review): a key that
-    vanished lost its live copy (moved aside, nothing written,
-    move-aside deleted), a key that appeared mixed old and new files
-    in one directory.  Now: vanished keys restore their live copy,
-    the move-aside copies of genuinely replaced partitions are
-    deleted (finalizing them — they are consistent regardless), and
-    an appeared-on-top-of-existing-files key then raises with both
-    of ITS generations intact."""
-    import shutil
-    for target, old in list(moved):
-        rel = os.path.relpath(target, path)
-        if rel not in written_rels:
-            # key vanished between scan and write: nothing replaced
-            # the live copy — restore it, never delete.  A failed or
-            # speculative task attempt may have left a PARTIAL target
-            # dir holding only this job's token-named files (the task
-            # ran write_group, then the stage retry re-evaluated the
-            # key away) — clear that debris so the rename cannot die
-            # ENOTEMPTY and strand the live copy aside; anything NOT
-            # this job's refuses loudly instead (r15 diff review)
-            if os.path.isdir(target):
-                foreign = [fn for fn in os.listdir(target)
-                           if not fn.endswith(f"-{job_token}.avro")]
-                if foreign:
-                    raise RuntimeError(
-                        f"cannot restore {old} over {target}: the "
-                        f"target holds files {sorted(foreign)[:5]} "
-                        "not written by this job — inspect and merge "
-                        "by hand")
-                shutil.rmtree(target)
-            os.rename(old, target)
-            moved.remove((target, old))
-    # delete the move-aside copies of the VERIFIED-replaced
-    # partitions BEFORE the grown check can raise: those partitions
-    # are consistent (scanned, rewritten by this job), and leaving
-    # their old copies behind would make every later overwrite of
-    # them refuse as a crashed swap (r15 diff review)
-    for _, old in moved:
-        shutil.rmtree(old, ignore_errors=True)
-    grown = [rel for rel in written_rels
-             if rel not in collected_rels
-             and any(not fn.endswith(f"-{job_token}.avro")
-                     for fn in os.listdir(os.path.join(path, rel))
-                     if fn.endswith(".avro"))]
-    if grown:
-        raise RuntimeError(
-            f"overwrite wrote partition(s) {sorted(grown)} that "
-            "were absent from the pre-write key scan, on top of "
-            "pre-existing files (non-deterministic input "
-            "DataFrame?) — old and new files now coexist there; "
-            f"inspect and remove one generation (new files match "
-            f"part-*-{job_token}.avro); all other partitions were "
-            "replaced consistently")
 
 
 # ----------------------------------------------------- distributed read
 
 def list_avro_containers(spark, path: str):
     """The ONE binaryFile listing for .avro containers under a tree:
-    recursive, '*.avro'-globbed, excluding any crashed overwrite's
-    '._overwrite_old/' move-aside dir (whose files would parse a
-    mangled partition value out of the path).  ``sources.read``'s
-    driver-side walk skips the same directories when it picks the
-    container whose header gives the schema."""
+    recursive and '*.avro'-globbed.  Spark's listing skips hidden
+    directories, so a write's staging directory is never read."""
     return (spark.read.format("binaryFile")
             .option("pathGlobFilter", "*.avro")
             .option("recursiveFileLookup", "true")
-            .load(path)
-            .where(~F.col("path").contains(MOVED_ASIDE + "/")))
+            .load(path))
 
 
 def read_avro_partitioned(spark: SparkSession, path: str,

@@ -15,7 +15,10 @@ checkpointing requires) and every operator lineage cut routes through
 ``DataFrame.checkpoint`` instead — blocks persist to the checkpoint
 dir and survive executor loss.  The flag is read per call, so a
 session can flip it between queries.  Results are identical either
-way; only the fault-tolerance/IO trade moves.
+way; only the fault-tolerance/IO trade moves.  Reliable checkpoint
+files accumulate in the checkpoint dir unless the session is launched
+with ``spark.cleaner.referenceTracking.cleanCheckpoints=true``, which
+lets the ContextCleaner delete them once their frames are unreachable.
 """
 
 from __future__ import annotations

@@ -14,7 +14,9 @@ Reference behavior being re-expressed (all file:line cites vs
     at commit, as the reference's driver does when it registers
     partition metadata after the tasks finish: the write lands in a
     hidden staging directory and each partition is then claimed by an
-    exclusive rename (see :func:`write_partitioned`).
+    exclusive rename (see :func:`write_partitioned`).  Dynamic
+    partition overwrite commits through the same staged tree, retiring
+    each replaced partition just before its claim.
   * stage tagging ``_CDAPStageName`` (``Constants.java:9-10``,
     ``Schemas.java:24-30``): opt-in constant column, off by default.
 
@@ -59,6 +61,9 @@ STAGE_FIELD = "_stage"
 #: the leading "." hides it from Spark's file index and from every
 #: lister here, and it holds no "=", so no walk takes it for a partition
 STAGING_PREFIX = ".graft-staging-"
+#: subtree of the staging directory that holds the partitions an
+#: overwrite replaces, until the publish has succeeded
+RETIRED = ".retired"
 
 
 class PartitionExistsError(RuntimeError):
@@ -149,17 +154,28 @@ def write_partitioned(df: DataFrame, spec: SinkSpec, path: str | None = None) ->
     The staging directory is removed after these outcomes.  Should the
     staged tree hold a file that no claimed partition carried, the
     claims roll back and the whole batch stays in the staging directory
-    for recovery, with an error naming it.  Costs and limits of this
-    protocol:
+    for recovery, with an error naming it.
+
+    ``overwrite_partitions`` (dynamic overwrite: replace only the
+    partitions the batch holds) commits through the same staged tree,
+    as a replace at commit time: before each staged partition is
+    claimed, the existing partition at its target moves into the
+    staging directory's ``.retired`` subtree.  Any failure moves every
+    claim back out and every retired partition back in; the retired
+    copies are deleted with the staging directory only after the
+    publish succeeds.  Costs and limits of this protocol:
 
     * A clashing CREATE write pays for the whole write before it finds
       the clash, then rolls back.
     * A crash mid-claim leaves each claimed partition whole (one rename
       each) and the unclaimed rest in the staging directory, which every
-      reader skips; delete it by hand.
+      reader skips; delete it by hand.  A crash mid-overwrite also
+      leaves the partitions it had retired under
+      ``<staging>/.retired/``: move back any whose target is missing.
     * On object stores a rename copies the bytes and is not exclusive,
-      so two writers there can both claim a partition.  Local disks and
-      HDFS rename atomically.
+      so two writers there can both claim a partition, and an overwrite
+      copies each retired partition too.  Local disks and HDFS rename
+      atomically.
     * Append writers running alongside a CREATE writer on the same
       target are not supported: files an append adds to a partition the
       CREATE writer has claimed leave with that partition if it rolls
@@ -179,7 +195,7 @@ def write_partitioned(df: DataFrame, spec: SinkSpec, path: str | None = None) ->
                 "stage tagging would overwrite it — rename the "
                 "column or unset stage_name")
         ndf = ndf.withColumn(STAGE_FIELD, F.lit(spec.stage_name))
-    if spec.mode_is_append or spec.overwrite_partitions:
+    if spec.mode_is_append and not spec.overwrite_partitions:
         _write(ndf, spec, out)
     else:
         _write_and_claim(ndf, spec, out)
@@ -187,19 +203,16 @@ def write_partitioned(df: DataFrame, spec: SinkSpec, path: str | None = None) ->
 
 
 def _write(ndf: DataFrame, spec: SinkSpec, out: str) -> None:
-    """Write the key-normalized ``ndf`` under ``out``: appending, or in
-    dynamic overwrite when ``spec.overwrite_partitions``."""
+    """Append the key-normalized ``ndf`` under ``out``."""
     spark = ndf.sparkSession
     if spec.fmt == "avro" and not spark_avro_available(spark):
         # no spark-avro connector jar in this deployment — use the
         # pure-Python container codec (same Hive layout + per-key writer
-        # fan-out + dynamic overwrite; see formats/avro_py.py)
+        # fan-out; see formats/avro_py.py)
         from ..formats import write_avro_partitioned
         codec = (spec.compression_codec or "deflate").lower()
-        write_avro_partitioned(
-            ndf, spec.field_names, out,
-            codec="null" if codec == "none" else codec,
-            overwrite_partitions=spec.overwrite_partitions)
+        write_avro_partitioned(ndf, spec.field_names, out,
+                               codec="null" if codec == "none" else codec)
         return
 
     if spec.cluster_by_key:
@@ -217,34 +230,22 @@ def _write(ndf: DataFrame, spec: SinkSpec, out: str) -> None:
             *[F.col(c) for c in spec.field_names],
             *[F.col(c) for c in spec.sort_within])
 
-    mode = "overwrite" if spec.overwrite_partitions else "append"
-    overwrite_conf = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(overwrite_conf, "static")
-    if spec.overwrite_partitions:
-        # ensure only incoming partitions are replaced even if the
-        # session default was changed (engine conf sets dynamic
-        # already); restored below — a session-wide flip would change
-        # the semantics of the USER's own later overwrite writes
-        spark.conf.set(overwrite_conf, "dynamic")
-    try:
-        writer = (ndf.write.mode(mode)
-                  .option("maxRecordsPerFile", str(spec.max_records_per_file))
-                  .partitionBy(*spec.field_names)
-                  .format(spec.fmt))
-        for k, v in spec.writer_options().items():
-            writer = writer.option(k, v)
-        writer.save(out)
-    finally:
-        if spec.overwrite_partitions:
-            spark.conf.set(overwrite_conf, prev_mode)
+    writer = (ndf.write.mode("append")
+              .option("maxRecordsPerFile", str(spec.max_records_per_file))
+              .partitionBy(*spec.field_names)
+              .format(spec.fmt))
+    for k, v in spec.writer_options().items():
+        writer = writer.option(k, v)
+    writer.save(out)
 
 
 def _write_and_claim(ndf: DataFrame, spec: SinkSpec, out: str) -> None:
-    """CREATE: stage the write under ``out``, then claim the staged
-    partitions in sorted order (so of two writers with overlapping
-    batches at least one gets through), undoing every claim of this
-    call on a clash or any other failure.  No Spark job beyond the
-    write itself."""
+    """CREATE or dynamic overwrite: stage the write under ``out``, then
+    claim the staged partitions in sorted order (so of two writers with
+    overlapping batches at least one gets through), retiring each
+    existing target first when ``spec.overwrite_partitions``.  Any
+    failure undoes every claim and every retire of this call.  No
+    Spark job beyond the write itself."""
     spark = ndf.sparkSession
     name = STAGING_PREFIX + uuid.uuid4().hex
     staging = f"{out.rstrip('/')}/{name}"
@@ -261,13 +262,19 @@ def _write_and_claim(ndf: DataFrame, spec: SinkSpec, out: str) -> None:
                                                  spec.field_names))
         rels = [hive_partition_path(spec.field_names, t) for t in staged]
         claimed: list[str] = []
+        retired: list[str] = []
+        left: list[str] = []
         try:
             for i, rel in enumerate(rels):
+                if spec.overwrite_partitions and tree.exists(rel):
+                    tree.retire(rel)
+                    retired.append(rel)
                 if not tree.claim(rel):
-                    # the later keys are not ours yet: any that exists
-                    # clashes too
+                    # the later keys are not ours yet: under CREATE any
+                    # that exists clashes too
                     clash = [staged[i]] + [t for t, r in zip(
-                        staged[i + 1:], rels[i + 1:]) if tree.exists(r)]
+                        staged[i + 1:], rels[i + 1:])
+                        if not spec.overwrite_partitions and tree.exists(r)]
                     raise PartitionExistsError(
                         f"partitions already exist under {out}: "
                         f"{clash[:5]}{'...' if len(clash) > 5 else ''}")
@@ -276,15 +283,18 @@ def _write_and_claim(ndf: DataFrame, spec: SinkSpec, out: str) -> None:
             if left:
                 # the listing missed part of the batch: deleting the
                 # staging directory would drop those rows unseen
-                keep_staging = True
                 raise RuntimeError(
-                    f"CREATE write to {out} staged files outside every "
+                    f"write to {out} staged files outside every "
                     f"partition it claimed, e.g. {left[:3]}; nothing was "
                     f"published and the batch is kept in {staging}")
+            tree.publish_files()
         except BaseException:
-            tree.rollback(claimed)
+            # the retired partitions live in the staging directory
+            # until the rollback has moved them all back
+            keep_staging = True
+            tree.rollback(claimed, retired)
+            keep_staging = bool(left)
             raise
-        tree.publish_files()
     finally:
         if not keep_staging:
             tree.remove_staging()
@@ -336,16 +346,27 @@ class _LocalClaims:
             raise
         return True
 
-    def unclaimed(self) -> list[str]:
-        """Files still below the staging directory's top level."""
-        return [os.path.relpath(os.path.join(d, f), self.staging)
-                for d, _, files in os.walk(self.staging)
-                if d != self.staging for f in files]
+    def retire(self, rel: str) -> None:
+        """Move the existing partition ``rel`` under ``.retired``."""
+        dst = os.path.join(self.staging, RETIRED, rel)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(os.path.join(self.out, rel), dst)
 
-    def rollback(self, claimed: list[str]) -> None:
+    def unclaimed(self) -> list[str]:
+        """Files still below the staging directory's top level, outside
+        ``.retired``."""
+        return [os.path.relpath(os.path.join(d, f), self.staging)
+                for top in os.scandir(self.staging)
+                if top.is_dir() and top.name != RETIRED
+                for d, _, files in os.walk(top.path) for f in files]
+
+    def rollback(self, claimed: list[str], retired: list[str]) -> None:
         for rel in reversed(claimed):
             os.rename(os.path.join(self.out, rel),
                       os.path.join(self.staging, rel))
+        for rel in reversed(retired):
+            os.rename(os.path.join(self.staging, RETIRED, rel),
+                      os.path.join(self.out, rel))
         for d in reversed(self.made):
             try:
                 os.rmdir(d)
@@ -421,20 +442,31 @@ class _HadoopClaims:
             raise
         return True
 
+    def retire(self, rel: str) -> None:
+        dst = self.path(self.staging, f"{RETIRED}/{rel}")
+        self.fs.mkdirs(dst.getParent())
+        self.fc.rename(self.path(self.out, rel), dst, self.none)
+
     def unclaimed(self) -> list[str]:
-        """Files still below the staging directory's top level."""
+        """Files still below the staging directory's top level, outside
+        ``.retired``."""
         top = self.staging.toUri().getPath().rstrip("/") + "/"
-        left, it = [], self.fs.listFiles(self.staging, True)
-        while it.hasNext():
-            rel = it.next().getPath().toUri().getPath()[len(top):]
-            if "/" in rel:
-                left.append(rel)
+        left = []
+        for st in self.fs.listStatus(self.staging):
+            if st.isDirectory() and st.getPath().getName() != RETIRED:
+                it = self.fs.listFiles(st.getPath(), True)
+                while it.hasNext():
+                    left.append(it.next().getPath().toUri().getPath()[
+                        len(top):])
         return left
 
-    def rollback(self, claimed: list[str]) -> None:
+    def rollback(self, claimed: list[str], retired: list[str]) -> None:
         for rel in reversed(claimed):
             self.fc.rename(self.path(self.out, rel),
                            self.path(self.staging, rel), self.none)
+        for rel in reversed(retired):
+            self.fc.rename(self.path(self.staging, f"{RETIRED}/{rel}"),
+                           self.path(self.out, rel), self.none)
         for d in reversed(self.made):
             try:
                 self.fs.delete(d, False)
@@ -591,16 +623,16 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame,
     """Upsert into a partitioned dataset without a table format:
     rows in ``updates`` replace existing rows with the same ``key_cols``
     tuple; new keys append.  Only the partitions PRESENT IN THE UPDATES
-    are rewritten (everything else is untouched bytes), via the dynamic
-    partition overwrite the engine already has — the Spark-first answer
-    to MERGE for append-mostly datasets when Delta/Iceberg isn't in
-    play.
+    are rewritten (everything else is untouched bytes), via
+    :func:`write_partitioned` with ``overwrite_partitions`` (staged,
+    replaced at commit) — the Spark-first answer to MERGE for
+    append-mostly datasets when Delta/Iceberg isn't in play.
 
     Shape: one partition-pruned read of the affected partitions (the
     ``isin`` filter on the partition columns prunes directories before
     IO), an anti-join on the business key (updates side is typically
-    small → broadcast), then a dynamic-overwrite write of those
-    partitions only.  The scan, the join and the rewrite scale with
+    small → broadcast), then an overwrite write of those partitions
+    only.  The scan, the join and the rewrite scale with
     the touched partitions; resolving the read does not: it lists the
     whole tree and, through ``merge_schema=True``, reads the footer of
     every file in the dataset in a Spark job before the filter prunes
@@ -685,9 +717,7 @@ def _overwrite_and_prune(spark: SparkSession, path: str, spec: SinkSpec,
     # materialize once and CUT LINEAGE: the remaining-partition collect
     # and the overwrite write both consume the merged DAG (pruned read
     # + anti-join + union) — without this every merge pays that plan
-    # twice, and worse, the write's lineage would re-read the very
-    # files the overwrite is deleting (an eviction away from
-    # FILE_NOT_EXIST).  Checkpointed blocks fail loudly if lost.
+    # twice.  Checkpointed blocks fail loudly if lost.
     merged = checkpoint_df(merged)
     remaining = (set(_collect_key_tuples(merged, spec.field_names))
                  if affected else set())
@@ -855,9 +885,9 @@ def compact_partitions(spark: SparkSession, path: str, fmt: str = "parquet",
     path is missing, ``._compact_old`` still holds the full pre-compact
     data — rename it back; if the live path exists, any leftover
     ``._compact_tmp`` / ``._compact_old`` is safe to delete (rename is
-    atomic on HDFS-like stores; on object stores prefer a per-partition
-    overwrite via :func:`write_partitioned` with
-    ``overwrite_partitions=True`` instead of directory renames).
+    atomic on HDFS-like stores; on object stores, where a rename copies,
+    prefer :func:`write_partitioned` with ``overwrite_partitions=True``,
+    which renames only the partitions it rewrites).
     """
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()

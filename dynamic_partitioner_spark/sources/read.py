@@ -47,8 +47,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..formats.avro_py import (MOVED_ASIDE, container_schema,
-                               read_avro_partitioned)
+from ..formats.avro_py import container_schema, read_avro_partitioned
 from ..functions.paths import unescape_path_name
 from ..spec import SinkSpec
 
@@ -183,9 +182,9 @@ def _first_file(spark: SparkSession, fs, root,
     ascending), so a Parquet tree yields the file Spark's inference
     would read.  Each directory on the way costs a fixed number of
     py4j calls, one listing and one joined string of its names; only
-    the entries visited are touched singly.  Move-aside directories of
-    an interrupted Avro overwrite are skipped, as
-    ``avro_py.list_avro_containers`` skips them.  Raises
+    the entries visited are touched singly.  Hidden names, a write's
+    staging directory among them, are skipped as Spark skips them.
+    Raises
     :class:`_Unresolved` on a summary file, a directory that is not
     ``key=value`` or a key repeated along the branch."""
     jvm = spark._jvm
@@ -200,7 +199,7 @@ def _first_file(spark: SparkSession, fs, root,
         if any(n.startswith(_SUMMARY) for n in names):
             raise _Unresolved(f"{p.toString()} holds a summary file")
         named = sorted((n, i) for i, n in enumerate(names)
-                       if not (_hidden(n) or n.endswith(MOVED_ASIDE)))
+                       if not _hidden(n))
         # a directory's files sort as "name/...": it goes after a
         # sibling that extends its name with a character below "/"
         # ("k=1" after "k=1.5"); the next name in order shows whether

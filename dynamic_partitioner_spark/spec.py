@@ -69,9 +69,10 @@ class SinkSpec:
     compression_codec: str | None = None
     append_to_partition: str | None = None     # None/"No" → CREATE, else APPEND
     #: dynamic partition overwrite: replace ONLY the partitions present in
-    #: the incoming data, leave all others untouched (Spark
-    #: partitionOverwriteMode=dynamic — the modern third write mode the
-    #: reference's CREATE/CREATE_OR_APPEND pair lacks)
+    #: the incoming data, leave all others untouched — the modern third
+    #: write mode the reference's CREATE/CREATE_OR_APPEND pair lacks.
+    #: Committed like CREATE, from a staging directory, whatever the
+    #: session's partitionOverwriteMode; wins over append_to_partition
     overwrite_partitions: bool = False
     stage_name: str | None = None              # opt-in _stage tag column (S7)
     # ORC-only knobs (ORCDynamicPartitionedDatasetSink.java:59-72)

@@ -21,7 +21,7 @@ from dynamic_partitioner_spark.formats import (decode_container,
                                                encode_container,
                                                read_avro_partitioned)
 from dynamic_partitioner_spark.operators.partitioned_write import (
-    write_partitioned)
+    STAGING_PREFIX, write_partitioned)
 from dynamic_partitioner_spark.spec import SinkSpec
 
 SCHEMA = T.StructType([
@@ -117,8 +117,9 @@ def test_avro_fallback_dynamic_overwrite(spark, purchase_df, tmp_out):
             if r.purchase_date != "2009-01-02"}
     want.add((999, "replacement", "2009-01-02"))
     assert got == want
-    # no stale ._overwrite_old trash left behind
-    assert not glob.glob(os.path.join(tmp_out, "*._overwrite_old"))
+    # the staging directory and its retired partition are gone
+    assert [d for d in os.listdir(tmp_out)
+            if d.startswith(STAGING_PREFIX)] == []
 
 
 def test_datasource_probe_mechanism(spark):
@@ -241,12 +242,11 @@ def test_avro_dispatch_prefers_spark_avro_when_available(
     assert calls["options"]["compression"] == "snappy"
 
     # availability FALSE → the fallback codec path, with the same
-    # layout arguments (codec name normalized, overwrite flag through)
+    # layout arguments (codec name normalized)
     fb = {}
 
-    def fake_fallback(ndf, fields, path, codec, overwrite_partitions):
-        fb.update(fields=fields, path=path, codec=codec,
-                  overwrite=overwrite_partitions)
+    def fake_fallback(ndf, fields, path, codec):
+        fb.update(fields=fields, path=path, codec=codec)
         return path
 
     monkeypatch.setattr(PW, "spark_avro_available", lambda _s: False)
@@ -254,8 +254,7 @@ def test_avro_dispatch_prefers_spark_avro_when_available(
     monkeypatch.setattr(FMT, "write_avro_partitioned", fake_fallback)
     got2 = PW.write_partitioned(df, spec, out)
     assert got2 == out
-    assert fb == {"fields": ["k"], "path": out, "codec": "snappy",
-                  "overwrite": False}
+    assert fb == {"fields": ["k"], "path": out, "codec": "snappy"}
 
 
 def test_nullable_long_beyond_2_53_survives_nulls(spark, tmp_path):
@@ -349,139 +348,6 @@ def test_failed_write_cleans_its_own_partials(spark, tmp_path,
     A.write_avro_partitioned(df, ["p"], out, codec="null")
     from dynamic_partitioner_spark.sources.read import read_partitioned
     assert read_partitioned(spark, out, "avro").count() == 2
-
-
-def test_overwrite_refuses_leftover_moveaside(spark, tmp_path):
-    """r13 review: a leftover ._overwrite_old dir may hold the only
-    good copy of the partition — refuse loudly instead of rmtree'ing
-    it; and reads never pick mangled values out of the move-aside."""
-    from dynamic_partitioner_spark.formats import write_avro_partitioned
-    from dynamic_partitioner_spark.sources.read import read_partitioned
-
-    df = spark.createDataFrame([(1, "a")], "id long, p string")
-    out = str(tmp_path / "t")
-    write_avro_partitioned(df, ["p"], out, codec="null")
-    # simulate the crashed prior overwrite
-    os.rename(f"{out}/p=a", f"{out}/p=a._overwrite_old")
-    write_avro_partitioned(df, ["p"], out, codec="null")  # rewrites p=a
-    # the move-aside's rows are INVISIBLE to reads (no 'a._overwrite_old' key)
-    assert {r.p for r in read_partitioned(spark, out, "avro")
-            .collect()} == {"a"}
-    with pytest.raises(RuntimeError, match="crashed mid-swap"):
-        write_avro_partitioned(df, ["p"], out, codec="null",
-                               overwrite_partitions=True)
-
-
-def test_overwrite_leftover_validates_before_any_rename(
-        spark, purchase_df, tmp_out):
-    """r15 review pin: the crashed-swap refusal must fire BEFORE any
-    partition is renamed aside — the old single pass stranded
-    already-moved partitions invisible to readers with nothing
-    written."""
-    spec = SinkSpec(name="p", field_names=["purchase_date"], fmt="avro")
-    write_partitioned(purchase_df, spec, tmp_out)
-    dates = sorted({r.purchase_date for r in
-                    purchase_df.select("purchase_date").collect()})
-    assert len(dates) >= 2
-    # plant a leftover for the LAST date so earlier keys would have
-    # been renamed first under the old single-pass order
-    bad = os.path.join(tmp_out, f"purchase_date={dates[-1]}")
-    os.mkdir(bad + "._overwrite_old")
-    with pytest.raises(RuntimeError, match="crashed mid-swap"):
-        write_partitioned(
-            purchase_df,
-            SinkSpec(name="p", field_names=["purchase_date"], fmt="avro",
-                     overwrite_partitions=True), tmp_out)
-    # every live partition is still visible — nothing was moved aside
-    for d in dates:
-        assert os.path.isdir(os.path.join(tmp_out, f"purchase_date={d}"))
-    assert glob.glob(os.path.join(
-        tmp_out, "*._overwrite_old")) == [bad + "._overwrite_old"]
-
-
-def test_partition_value_colliding_with_marker_refuses(spark, tmp_path):
-    """r15 review pin: a VALUE whose directory ends in
-    '._overwrite_old' would be invisible to every read (the listing
-    filters the marker) and spuriously refuse sibling overwrites —
-    the writer rejects it loudly."""
-    from dynamic_partitioner_spark.formats.avro_py import (
-        write_avro_partitioned)
-    df = spark.createDataFrame([(1, "x._overwrite_old")], "id long, p string")
-    with pytest.raises(Exception, match="reserved overwrite marker"):
-        write_avro_partitioned(df, ["p"], str(tmp_path / "t"))
-
-
-def test_overwrite_reconciliation_restores_and_flags(spark, tmp_path):
-    """r15 review pin for the nondeterministic-input reconciliation
-    (unit level — the branches need the key scan and the write job to
-    disagree, which a deterministic DataFrame never does): a key that
-    VANISHED between scan and write gets its live copy restored
-    (never deleted); a key that APPEARED on top of pre-existing files
-    raises with both generations intact; a genuinely replaced key's
-    move-aside copy is deleted."""
-    import shutil
-
-    from dynamic_partitioner_spark.formats.avro_py import (
-        _reconcile_overwrite)
-    root = str(tmp_path / "t")
-    # replaced partition: moved aside + rewritten by this job
-    os.makedirs(os.path.join(root, "p=a._overwrite_old"))
-    os.makedirs(os.path.join(root, "p=a"))
-    open(os.path.join(root, "p=a", "part-x-tok1.avro"), "w").close()
-    # vanished partition: moved aside, nothing written
-    os.makedirs(os.path.join(root, "p=b._overwrite_old"))
-    open(os.path.join(root, "p=b._overwrite_old", "part-old.avro"),
-         "w").close()
-    moved = [(os.path.join(root, "p=a"),
-              os.path.join(root, "p=a._overwrite_old")),
-             (os.path.join(root, "p=b"),
-              os.path.join(root, "p=b._overwrite_old"))]
-    _reconcile_overwrite(root, moved, {"p=a", "p=b"}, {"p=a"}, "tok1")
-    assert os.path.isdir(os.path.join(root, "p=b"))          # restored
-    assert not os.path.isdir(os.path.join(root, "p=b._overwrite_old"))
-    assert not os.path.isdir(os.path.join(root, "p=a._overwrite_old"))
-    # vanished key whose target holds ONLY this job's debris (a
-    # failed/speculative attempt ran write_group before the retry
-    # re-evaluated the key away): debris cleared, live copy restored
-    os.makedirs(os.path.join(root, "p=d._overwrite_old"))
-    open(os.path.join(root, "p=d._overwrite_old", "part-live.avro"),
-         "w").close()
-    os.makedirs(os.path.join(root, "p=d"))
-    open(os.path.join(root, "p=d", "part-z-tok1.avro"), "w").close()
-    _reconcile_overwrite(
-        root, [(os.path.join(root, "p=d"),
-                os.path.join(root, "p=d._overwrite_old"))],
-        {"p=d"}, set(), "tok1")
-    assert os.path.exists(os.path.join(root, "p=d", "part-live.avro"))
-    assert not os.path.exists(os.path.join(root, "p=d", "part-z-tok1.avro"))
-    # ... but FOREIGN files in the target refuse loudly, both kept
-    os.makedirs(os.path.join(root, "p=e._overwrite_old"))
-    os.makedirs(os.path.join(root, "p=e"))
-    open(os.path.join(root, "p=e", "part-foreign.avro"), "w").close()
-    with pytest.raises(RuntimeError, match="cannot restore"):
-        _reconcile_overwrite(
-            root, [(os.path.join(root, "p=e"),
-                    os.path.join(root, "p=e._overwrite_old"))],
-            {"p=e"}, set(), "tok1")
-    assert os.path.isdir(os.path.join(root, "p=e._overwrite_old"))
-    # appeared partition on top of pre-existing files -> loud, AND the
-    # verified-replaced partition's move-aside is deleted BEFORE the
-    # raise (its replacement is consistent; leaving the old copy
-    # would refuse every later overwrite as a crashed swap)
-    shutil.rmtree(root)
-    os.makedirs(os.path.join(root, "p=c"))
-    open(os.path.join(root, "p=c", "part-stale.avro"), "w").close()
-    open(os.path.join(root, "p=c", "part-y-tok2.avro"), "w").close()
-    os.makedirs(os.path.join(root, "p=f._overwrite_old"))
-    os.makedirs(os.path.join(root, "p=f"))
-    open(os.path.join(root, "p=f", "part-w-tok2.avro"), "w").close()
-    with pytest.raises(RuntimeError, match="absent from the pre-write"):
-        _reconcile_overwrite(
-            root, [(os.path.join(root, "p=f"),
-                    os.path.join(root, "p=f._overwrite_old"))],
-            {"p=f"}, {"p=c", "p=f"}, "tok2")
-    assert os.path.exists(os.path.join(root, "p=c", "part-stale.avro"))
-    assert not os.path.isdir(os.path.join(root, "p=f._overwrite_old"))
 
 
 def test_avro_rejects_invalid_field_names(spark, tmp_path):

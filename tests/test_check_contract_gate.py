@@ -126,6 +126,7 @@ def test_sweep_clean_scratch_is_zero(tmp_path):
 def test_sweep_flags_temporary_and_unreferenced_batches(tmp_path):
     d = str(tmp_path)
     _mk(f"{d}/tbl/_temporary/0")          # committer staging debris
+    _mk(f"{d}/pt/.graft-staging-0123abcd/k=a")   # a crashed write
     _mk(f"{d}/vt/_log")
     _mk(f"{d}/vt/batch-00000001")          # referenced
     _mk(f"{d}/vt/batch-00000002")          # crash debris: no commit
@@ -133,8 +134,9 @@ def test_sweep_flags_temporary_and_unreferenced_batches(tmp_path):
                "dirs": ["batch-00000001"]},
               open(f"{d}/vt/_log/00000001.json", "w"))
     n, dirs = CC.sweep_writer_debris(d)
-    assert n == 2
-    assert set(dirs) == {"tbl/_temporary", "vt/batch-00000002"}
+    assert n == 3
+    assert set(dirs) == {"tbl/_temporary", "pt/.graft-staging-0123abcd",
+                         "vt/batch-00000002"}
 
 
 def test_sweep_skips_intentional_orphan_plants(tmp_path):

@@ -35,7 +35,8 @@ def test_full_contract_matches_duckdb():
     schema and values as its DuckDB ``oracle_sql()`` twin.  Runs the
     ``tools/check_contract.py`` CLI (its default corpus is sf0.01) in
     its own process, so runtime confs left behind by other tests
-    cannot leak into the check."""
+    cannot leak into the check.  The run also leaves no writer debris
+    (committer or ``write_partitioned`` staging directories) behind."""
     import subprocess
 
     r = subprocess.run(
@@ -46,6 +47,7 @@ def test_full_contract_matches_duckdb():
     assert r.returncode == 0 and lines and lines[-1] == "ALL OK", (
         f"check_contract.py exited {r.returncode}:\n" + "\n".join(not_ok)
         + "\n--- stderr tail ---\n" + r.stderr[-2000:])
+    assert "# orphan_dirs_seen=0" in lines, "\n".join(not_ok)
 
 
 def test_oracle_sql_is_syntactically_valid_duckdb():

@@ -736,20 +736,23 @@ def test_cdc_null_op_rows_are_live_and_survive_compaction(spark, tmp_path):
 
 
 def test_overwrite_mode_conf_is_restored(spark, tmp_path):
-    from dynamic_partitioner_spark.operators.partitioned_write import (
-        write_partitioned)
-    from dynamic_partitioner_spark.spec import SinkSpec
-
+    """The overwrite neither needs nor touches the session's
+    ``partitionOverwriteMode``: under ``static`` it still replaces only
+    the partition it writes, and the conf still reads ``static``."""
     conf = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(conf)
     spark.conf.set(conf, "static")
     try:
-        df = spark.createDataFrame([(1, "a")], "id long, k string")
-        write_partitioned(
-            df, SinkSpec(name="t", field_names=["k"],
-                         overwrite_partitions=True),
-            str(tmp_path / "w"))
-        assert spark.conf.get(conf) == "static"   # restored, not leaked
+        out = str(tmp_path / "w")
+        spec = SinkSpec(name="t", field_names=["k"],
+                        overwrite_partitions=True)
+        write_partitioned(spark.createDataFrame(
+            [(1, "a"), (2, "b"), (3, "c")], "id long, k string"), spec, out)
+        write_partitioned(spark.createDataFrame(
+            [(9, "b")], "id long, k string"), spec, out)
+        assert {(r.id, r.k) for r in read_partitioned(spark, out).collect()} \
+            == {(1, "a"), (9, "b"), (3, "c")}
+        assert spark.conf.get(conf) == "static"
     finally:
         spark.conf.set(conf, prev)
 
@@ -1329,13 +1332,19 @@ def test_normalize_resolves_dotted_column_names_exactly(spark):
         normalize_partition_keys(df2, ["region.code"])
 
 
-# ------------------------------------------- CREATE as a commit-time claim
+# ------------------------- CREATE and overwrite as a commit-time claim
 
 FORMATS = ["parquet", "orc", "avro"]
+MODES = ["create", "overwrite"]
+#: (format, write mode); the CREATE cases keep the bare format as id
+FMT_MODES = [pytest.param(fmt, mode,
+                          id=fmt if mode == "create" else f"{fmt}-{mode}")
+             for mode in MODES for fmt in FORMATS]
 
 
-def _create_spec(fmt: str, fields=("k",)) -> SinkSpec:
-    return SinkSpec(name="c", field_names=list(fields), fmt=fmt)
+def _create_spec(fmt: str, fields=("k",), mode: str = "create") -> SinkSpec:
+    return SinkSpec(name="c", field_names=list(fields), fmt=fmt,
+                    overwrite_partitions=mode == "overwrite")
 
 
 def _batch(spark, keys, rows_per_key: int = 3):
@@ -1360,6 +1369,19 @@ def _tree_bytes(root: str) -> dict[str, bytes]:
 
 def _keys_on_disk(spark, out: str, fields=("k",)) -> set:
     return list_existing_partitions(spark, out, list(fields))
+
+
+def _fail_nth_claim(patch, cls, n: int) -> None:
+    """Make ``cls.claim`` raise on its ``n``-th call."""
+    claim, calls = cls.claim, []
+
+    def failing(self, rel):
+        calls.append(rel)
+        if len(calls) == n:
+            raise RuntimeError("claim boom")
+        return claim(self, rel)
+
+    patch.setattr(cls, "claim", failing)
 
 
 def test_staging_name_is_hidden_and_not_a_partition():
@@ -1418,14 +1440,15 @@ def test_create_partial_clash_rolls_back_every_claim(spark, tmp_path, fmt):
     assert _staging_dirs(out) == []
 
 
-@pytest.mark.parametrize("fmt", FORMATS)
-def test_create_failed_write_leaves_nothing_visible(spark, tmp_path, fmt):
+@pytest.mark.parametrize("fmt,mode", FMT_MODES)
+def test_create_failed_write_leaves_nothing_visible(spark, tmp_path, fmt,
+                                                    mode):
     """A task that raises mid-job fails the write: no partition of the
-    batch appears (even those whose tasks finished) and the staging
-    directory is gone."""
+    batch appears (even those whose tasks finished), an overwrite
+    replaces none, and the staging directory is gone."""
     out = str(tmp_path / fmt)
-    spec = _create_spec(fmt)
-    write_partitioned(_batch(spark, ["z"], 1), spec, out)
+    spec = _create_spec(fmt, mode=mode)
+    write_partitioned(_batch(spark, ["z", "1"], 1), spec, out)
     before = _tree_bytes(out)
     bad = spark.range(40, numPartitions=4).select(
         (F.col("id") % 8).cast("string").alias("k"),
@@ -1433,40 +1456,57 @@ def test_create_failed_write_leaves_nothing_visible(spark, tmp_path, fmt):
         .otherwise(F.col("id")).alias("v"))
     with pytest.raises(Exception, match="boom"):
         write_partitioned(bad, spec, out)
-    assert _keys_on_disk(spark, out) == {("z",)}
+    assert _keys_on_disk(spark, out) == {("z",), ("1",)}
     assert _tree_bytes(out) == before
     assert _staging_dirs(out) == []
 
 
-@pytest.mark.parametrize("fmt", FORMATS)
-def test_create_two_level_keys_under_existing_parent(spark, tmp_path, fmt):
-    """A new leaf lands inside an existing parent directory; on a clash
-    a parent directory the claim created goes away with its leaf."""
+@pytest.mark.parametrize("fmt,mode", FMT_MODES)
+def test_create_two_level_keys_under_existing_parent(spark, tmp_path, fmt,
+                                                     mode):
+    """A new leaf lands inside an existing parent directory.  On a
+    CREATE clash a parent directory the claim created goes away with
+    its leaf; an overwrite replaces the existing leaf in its parent."""
     out = str(tmp_path / fmt)
-    spec = _create_spec(fmt, ("a", "b"))
-    two = lambda keys: spark.createDataFrame(  # noqa: E731
-        [(a, b, 1) for a, b in keys], "a string, b string, v long")
+    spec = _create_spec(fmt, ("a", "b"), mode)
+    two = lambda keys, v=1: spark.createDataFrame(  # noqa: E731
+        [(a, b, v) for a, b in keys], "a string, b string, v long")
     write_partitioned(two([("1", "1")]), spec, out)
     write_partitioned(two([("1", "2"), ("2", "1")]), spec, out)
     assert _keys_on_disk(spark, out, ("a", "b")) == {
         ("1", "1"), ("1", "2"), ("2", "1")}
-    with pytest.raises(PartitionExistsError, match=r"\('1', '1'\)"):
-        write_partitioned(two([("0", "5"), ("1", "1")]), spec, out)
-    assert not os.path.exists(os.path.join(out, "a=0"))
+    if mode == "create":
+        with pytest.raises(PartitionExistsError, match=r"\('1', '1'\)"):
+            write_partitioned(two([("0", "5"), ("1", "1")]), spec, out)
+        assert not os.path.exists(os.path.join(out, "a=0"))
+    else:
+        write_partitioned(two([("0", "5"), ("1", "1")], 2), spec, out)
+        assert _keys_on_disk(spark, out, ("a", "b")) == {
+            ("0", "5"), ("1", "1"), ("1", "2"), ("2", "1")}
     assert sorted(os.listdir(os.path.join(out, "a=1"))) == ["b=1", "b=2"]
-    assert read_partitioned(spark, out, fmt).count() == 3
+    back = read_partitioned(spark, out, fmt)
+    assert sorted((r.a, r.b, r.v) for r in back.collect()) == sorted(
+        [("1", "2", 1), ("2", "1", 1)] + (
+            [("1", "1", 1)] if mode == "create"
+            else [("0", "5", 2), ("1", "1", 2)]))
     assert _staging_dirs(out) == []
 
 
-@pytest.mark.parametrize("fmt", FORMATS)
-def test_create_default_partition_value_is_claimed(spark, tmp_path, fmt):
+@pytest.mark.parametrize("fmt,mode", FMT_MODES)
+def test_create_default_partition_value_is_claimed(spark, tmp_path, fmt,
+                                                   mode):
     out = str(tmp_path / fmt)
-    spec = _create_spec(fmt)
+    spec = _create_spec(fmt, mode=mode)
     write_partitioned(_batch(spark, ["", "x"]), spec, out)
     assert os.path.isdir(os.path.join(out, "k=__HIVE_DEFAULT_PARTITION__"))
-    with pytest.raises(PartitionExistsError, match=r"\('',\)"):
-        write_partitioned(_batch(spark, [""]), spec, out)
+    if mode == "create":
+        with pytest.raises(PartitionExistsError, match=r"\('',\)"):
+            write_partitioned(_batch(spark, [""], 1), spec, out)
+    else:
+        write_partitioned(_batch(spark, [""], 1), spec, out)
     assert _keys_on_disk(spark, out) == {("",), ("x",)}
+    assert read_partitioned(spark, out, fmt).count() == \
+        (6 if mode == "create" else 4)
     assert _staging_dirs(out) == []
 
 
@@ -1496,62 +1536,84 @@ def test_create_empty_batch_tree(spark, tmp_path, fmt):
 def test_create_claims_through_filecontext_off_local_disk(
         spark, tmp_path, monkeypatch):
     """The claim used for non-``file`` schemes (``FileContext.rename``
-    with ``Options.Rename.NONE``), driven on the local disk: an
-    existing leaf, empty or not, is a clash, nothing nests inside it,
-    and the rollback restores the tree."""
+    with ``Options.Rename.NONE``), driven on the local disk, in both
+    write modes.  CREATE: an existing leaf, empty or not, is a clash,
+    nothing nests inside it, and the rollback restores the tree.
+    Overwrite: a claim failing mid-publish moves the retired leaves
+    back, and a clean overwrite replaces them."""
     from dynamic_partitioner_spark.operators import partitioned_write as PW
     monkeypatch.setattr(PW, "is_local_scheme", lambda scheme: False)
-    out = str(tmp_path / "t")
-    spec = _create_spec("parquet")
-    write_partitioned(_batch(spark, ["b"], 1), spec, out)
-    os.makedirs(os.path.join(out, "k=d"))
-    before = _tree_bytes(out)
-    for keys, clash in ((["a", "b", "c"], "b"), (["c", "d"], "d")):
-        with pytest.raises(PartitionExistsError, match=f"'{clash}'"):
-            write_partitioned(_batch(spark, keys), spec, out)
-        assert _tree_bytes(out) == before
+    for mode in MODES:
+        out = str(tmp_path / mode)
+        spec = _create_spec("parquet", mode=mode)
+        write_partitioned(_batch(spark, ["b"], 1), spec, out)
+        os.makedirs(os.path.join(out, "k=d"))
+        before = _tree_bytes(out)
+        if mode == "create":
+            for keys, clash in ((["a", "b", "c"], "b"), (["c", "d"], "d")):
+                with pytest.raises(PartitionExistsError, match=f"'{clash}'"):
+                    write_partitioned(_batch(spark, keys), spec, out)
+                assert _tree_bytes(out) == before
+            keys, rows = ["a", "c"], 7
+        else:
+            # b and d are retired before the fourth claim (d's) fails
+            with monkeypatch.context() as m:
+                _fail_nth_claim(m, PW._HadoopClaims, 4)
+                with pytest.raises(RuntimeError, match="claim boom"):
+                    write_partitioned(_batch(spark, ["a", "b", "c", "d"]),
+                                      spec, out)
+            assert _tree_bytes(out) == before
+            keys, rows = ["a", "b", "c", "d"], 12
         assert sorted(d for d in os.listdir(out) if "=" in d) == \
             ["k=b", "k=d"]
-    assert os.listdir(os.path.join(out, "k=d")) == []
-    write_partitioned(_batch(spark, ["a", "c"]), spec, out)
-    assert _keys_on_disk(spark, out) == {("a",), ("b",), ("c",), ("d",)}
-    assert read_partitioned(spark, out).count() == 7
-    assert _staging_dirs(out) == []
+        assert os.listdir(os.path.join(out, "k=d")) == []
+        assert _staging_dirs(out) == []
+        write_partitioned(_batch(spark, keys), spec, out)
+        assert _keys_on_disk(spark, out) == {("a",), ("b",), ("c",), ("d",)}
+        assert read_partitioned(spark, out).count() == rows
+        assert _staging_dirs(out) == []
 
 
 def test_create_into_existing_target_runs_only_the_write_jobs(spark,
                                                               tmp_path):
-    """CREATE into a target that already has partitions launches the
-    same Spark jobs as an append of the same batch: the claim collects
-    no keys."""
+    """CREATE or overwrite into a target that already has partitions
+    launches the same Spark jobs as an append of the same batch, in
+    every format: the commit collects no keys."""
     from test_read_resolve import _jobs_during
 
     batch = spark.range(100).selectExpr("cast(id % 10 as string) as k",
                                         "id as v")
-    old = spark.range(20).selectExpr("cast(100 + id as string) as k",
-                                     "id as v")
-    create = _create_spec("parquet")
-    append = dataclasses.replace(create,
-                                 append_to_partition="CREATE_OR_APPEND")
-    targets = {}
-    for name, spec in (("create", create), ("append", append)):
-        targets[name] = str(tmp_path / name)
-        write_partitioned(old, spec, targets[name])
-    create_jobs = _jobs_during(
-        spark, lambda: write_partitioned(batch, create, targets["create"]))
-    append_jobs = _jobs_during(
-        spark, lambda: write_partitioned(batch, append, targets["append"]))
-    assert len(create_jobs) == len(append_jobs) >= 1
-    assert len(_keys_on_disk(spark, targets["create"])) == 30
+    for fmt in FORMATS:
+        append = dataclasses.replace(_create_spec(fmt),
+                                     append_to_partition="CREATE_OR_APPEND")
+        for mode in MODES:
+            # the overwrite's target shares keys 5-9 with the batch
+            first = 100 if mode == "create" else 5
+            old = spark.range(20).selectExpr(
+                f"cast({first} + id as string) as k", "id as v")
+            spec = _create_spec(fmt, mode=mode)
+            targets = {}
+            for name, s in (("write", spec), ("append", append)):
+                targets[name] = str(tmp_path / f"{fmt}-{mode}-{name}")
+                write_partitioned(old, s, targets[name])
+            write_jobs = _jobs_during(
+                spark,
+                lambda: write_partitioned(batch, spec, targets["write"]))
+            append_jobs = _jobs_during(
+                spark,
+                lambda: write_partitioned(batch, append, targets["append"]))
+            assert len(write_jobs) == len(append_jobs) >= 1, (fmt, mode)
+            assert len(_keys_on_disk(spark, targets["write"])) == \
+                (30 if mode == "create" else 25)
 
 
-@pytest.mark.parametrize("fmt", FORMATS)
-def test_create_escaped_column_name_is_claimed(spark, tmp_path, fmt):
+@pytest.mark.parametrize("fmt,mode", FMT_MODES)
+def test_create_escaped_column_name_is_claimed(spark, tmp_path, fmt, mode):
     """Spark escapes the partition column NAME as well as the value
     (``a:b`` -> ``a%3Ab=``); the claim must list the staged tree with
     that spelling, or it would find no partition and drop the batch."""
     out = str(tmp_path / fmt)
-    spec = SinkSpec(name="c", field_names=["a:b"], fmt=fmt)
+    spec = _create_spec(fmt, ("a:b",), mode)
     batch = spark.createDataFrame([("x", 1), ("y:z", 2)],
                                   "`a:b` string, v long")
     write_partitioned(batch, spec, out)
@@ -1561,9 +1623,34 @@ def test_create_escaped_column_name_is_claimed(spark, tmp_path, fmt):
     assert sorted(read_partitioned(spark, out, fmt).select("a:b", "v")
                   .collect()) == [("x", 1), ("y:z", 2)]
     assert _staging_dirs(out) == []
-    with pytest.raises(PartitionExistsError, match=r"\('x',\)"):
+    if mode == "create":
+        with pytest.raises(PartitionExistsError, match=r"\('x',\)"):
+            write_partitioned(batch, spec, out)
+    else:
         write_partitioned(batch, spec, out)
+        assert sorted(read_partitioned(spark, out, fmt).select("a:b", "v")
+                      .collect()) == [("x", 1), ("y:z", 2)]
     assert len(_tree_bytes(os.path.join(out, "a%3Ab=x"))) >= 1
+    assert _staging_dirs(out) == []
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_overwrite_failing_claim_restores_every_retired_partition(
+        spark, tmp_path, monkeypatch, fmt):
+    """An overwrite whose claim fails on its second partition undoes
+    the publish: the first claim moves back out, both retired
+    partitions move back in byte for byte, and the staging directory
+    goes, its ``.retired`` subtree with it."""
+    from dynamic_partitioner_spark.operators import partitioned_write as PW
+    out = str(tmp_path / fmt)
+    spec = _create_spec(fmt, mode="overwrite")
+    write_partitioned(_batch(spark, ["a", "b", "c"], 1), spec, out)
+    before = _tree_bytes(out)
+    _fail_nth_claim(monkeypatch, PW._LocalClaims, 2)
+    with pytest.raises(RuntimeError, match="claim boom"):
+        write_partitioned(_batch(spark, ["a", "b", "new"]), spec, out)
+    assert _tree_bytes(out) == before
+    assert _keys_on_disk(spark, out) == {("a",), ("b",), ("c",)}
     assert _staging_dirs(out) == []
 
 

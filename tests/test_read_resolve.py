@@ -250,21 +250,14 @@ def test_hidden_names_match_spark(spark):
         assert _hidden(name) == keep.shouldFilterOutPathName(name), name
 
 
-def test_avro_resolve_skips_moved_aside_dirs_and_runs_no_job(spark,
-                                                             tmp_path):
+def test_avro_resolve_runs_no_job(spark, tmp_path):
     """The jar-less Avro read takes its keys and header from the same
-    walk: no Spark job, and the move-aside directory of an interrupted
-    overwrite is neither the schema source nor read."""
+    walk, with no Spark job."""
     out = tmp_path / "av"
     df = spark.createDataFrame([(1, 2.5, "x"), (2, 3.5, "y")],
                                "id long, val double, k string")
     write_partitioned(df, SinkSpec(name="t", field_names=["k"],
                                    fmt="avro"), str(out))
-    from pyspark.sql import types as T
-    other = T.StructType([T.StructField("zzz", T.StringType())])
-    os.makedirs(out / "k=a._overwrite_old")
-    (out / "k=a._overwrite_old" / "part-0.avro").write_bytes(
-        encode_container([("old",)], other, b"\0" * 16, "null"))
     frames = []
     jobs = _jobs_during(spark, lambda: frames.append(
         read_partitioned(spark, str(out), "avro")))

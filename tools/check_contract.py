@@ -130,12 +130,15 @@ def compare(key: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[str
 def sweep_writer_debris(scratch: str) -> tuple[int, list[str]]:
     """Writer-debris canary: after the full-key pass, sweep the run's
     own scratch outputs for crash debris — committer staging dirs
-    (``_temporary``) anywhere, plus unreferenced batch dirs inside
+    (``_temporary``) and ``write_partitioned`` staging dirs
+    (``.graft-staging-*``) anywhere, plus unreferenced batch dirs inside
     versioned tables (the commit-log contract comes from
     ``operators/versioned.py`` itself: a hand-rolled copy would
     silently flag every healthy batch if the log schema changed; the
     ``ops_orphan_files`` table is skipped because it plants two
     orphans by design).  Local directory listings only, no Spark job."""
+    from dynamic_partitioner_spark.operators.partitioned_write import (
+        STAGING_PREFIX)
     from dynamic_partitioner_spark.operators.versioned import (
         is_batch_shaped, unreferenced_dirs)
     debris: list[str] = []
@@ -144,7 +147,7 @@ def sweep_writer_debris(scratch: str) -> tuple[int, list[str]]:
         return 0, debris
     for root, dirs, _files in os.walk(scratch):
         for d in list(dirs):
-            if d == "_temporary":
+            if d == "_temporary" or d.startswith(STAGING_PREFIX):
                 debris.append(os.path.relpath(os.path.join(root, d),
                                               scratch))
                 dirs.remove(d)
